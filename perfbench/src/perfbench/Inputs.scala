@@ -1,6 +1,6 @@
 package perfbench
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import graft.cdc.LogGen
@@ -87,33 +87,6 @@ object Inputs {
       }
     }
   }
-
-  /** Cache one generated input set per (name, seed, size) under `root`:
-    * generation is not part of the measured setup. Keeps the most recently
-    * used few. */
-  def cached(root: Path, name: String)(gen: Path => Unit): Path = {
-    val dir = root.resolve(name)
-    val ready = dir.resolve("_READY")
-    if (Files.exists(ready)) {
-      // mark it used, so pruning keeps it
-      Files.setLastModifiedTime(ready, java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      return dir
-    }
-    Files.createDirectories(root)
-    val tmp = root.resolve(s".tmp-$name-${System.nanoTime()}")
-    gen(tmp)
-    Files.write(tmp.resolve("_READY"), Array.emptyByteArray)
-    Util.delete(dir)
-    Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-    val old = Files.list(root).iterator().asScala.toVector
-      .filter(d => Files.exists(d.resolve("_READY")))
-      .sortBy(d => -Files.getLastModifiedTime(d.resolve("_READY")).toMillis)
-      .drop(KeepInputSets)
-    old.foreach(Util.delete)
-    dir
-  }
-
-  val KeepInputSets = 8
 
   /** A replayable log: LogGen.writeLog, partitioned into `epochs`. */
   def writeLog(spark: SparkSession, dir: Path, seed: Long, from: Long, n: Long,

@@ -19,8 +19,10 @@ object Layers {
 
   private def wallS(j: Trace.Job): Double = (j.endMs - j.startMs) / 1000.0
 
-  /** Per-epoch layer times inside the epoch-carrying spans `keep` selects. */
-  def epochs(t: Trace, keep: Trace.Span => Boolean, epochsOf: Trace.Span => Int,
+  /** Per-epoch layer times inside the epoch-carrying spans `keep` selects.
+    * Checks that each epoch's MERGE write job was found: a job whose call
+    * site could not be read, or was read too late, is left unmatched. */
+  def epochs(ctx: Ctx, t: Trace, keep: Trace.Span => Boolean, epochsOf: Trace.Span => Int,
       events: Long): Map[String, Double] = {
     val spans = t.resolvedSpans.filter(keep)
     val parents = t.jobParents
@@ -28,7 +30,13 @@ object Layers {
     val jobsOf = spans.map(s => s -> t.allJobs.filter(j => parents.get(j.id).contains(s.id))).toMap
     val jobs = jobsOf.values.flatten.toVector
 
-    val writes = jobs.filter(j => j.file == "Merge.scala" && j.op == "parquet")
+    def isWrite(j: Trace.Job) = j.file == "Merge.scala" && j.op == "parquet"
+    spans.foreach { s =>
+      val n = jobsOf(s).count(isWrite)
+      ctx.check(n == epochsOf(s), s"${s.name} span ${s.id} has $n MERGE write jobs, " +
+        s"expected ${epochsOf(s)}")
+    }
+    val writes = jobs.filter(isWrite)
     val stageSets = writes.map { j =>
       val ran = j.stageIds.flatMap(t.stage).filter(_.tasks > 0).sortBy(_.stageId)
       (ran.init, ran.last)
@@ -45,6 +53,7 @@ object Layers {
     val keysS = fileS(j => j.file == "Merge.scala" && j.op == "collect")
     val bloomS = fileS(_.file == "KeyBloom.scala")
     val lineageS = fileS(_.file == "Lineage.scala")
+    val unmatchedS = fileS(_.callSite == "?")
     val serialS = spans.map { s =>
       (s.durMs - t.covered(s.startMs, s.endMs, jobsOf(s).map(j => (j.startMs, j.endMs)))) / 1000.0
     }.sum
@@ -63,6 +72,7 @@ object Layers {
       "cdc.driver_serial_s" -> serialS / epochs,
       "cdc.checkpoint_s" -> spans.map(_.attrs.getOrElse("checkpointMs", 0.0)).sum / 1000.0 / epochs,
       "cdc.jobs_per_epoch" -> jobs.size / epochs,
-      "trace.unattributed_s" -> math.max(0.0, wall - attributed) / epochs)
+      "trace.unattributed_s" -> math.max(0.0, wall - attributed) / epochs,
+      "trace.unmatched_job_s" -> unmatchedS / epochs)
   }
 }

@@ -109,6 +109,7 @@ object Main {
     "jvm.gc_s" -> "s",
     "replay.scaling_eff_1to4" -> "ratio",
     "trace.unattributed_s" -> "s",
+    "trace.unmatched_job_s" -> "s",
     "trace.overhead_pct" -> "%")
 
   final case class Args(workload: String = "", seed: Long = 1L, seconds: Int = 20,
@@ -177,10 +178,9 @@ object Main {
       spark.streams.addListener(t.streamListener)
     }
     val ctx = new Ctx(spark, runDir, trace)
-    val inputs = work.resolve("inputs")
     val raw = a.workload match {
-      case "bulk_replay" => Workloads.bulk(ctx, inputs, a.seed, sz, a.trace)
-      case "tail_microbatch" => Workloads.tail(ctx, inputs, a.seed, sz, a.trace)
+      case "bulk_replay" => Workloads.bulk(ctx, a.seed, sz, a.trace)
+      case "tail_microbatch" => Workloads.tail(ctx, a.seed, sz, a.trace)
     }
     val m = raw ++ Map("setup_s" -> (sessionS + raw("setup_s")), "peak_rss_mb" -> Host.peakRssMb())
     trace.foreach(_.write(work.resolve("traces").resolve(s"$runId.jsonl")))

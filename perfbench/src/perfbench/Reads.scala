@@ -35,7 +35,7 @@ object Reads {
     * small pass whose timings are dropped. */
   def warmup(ctx: Ctx, table: String, windows: Seq[Window], oracle: Inputs.Oracle,
       probeSeed: Long): Unit =
-    pass(ctx, table, windows.take(1), oracle, Plan(feeds = 1, probes = 30, scans = 1,
+    pass(ctx, table, windows.take(1), oracle, Plan(feeds = 2, probes = 30, scans = 2,
       loads = 1), ~probeSeed, new Samples)
 
   /** One timed pass over `table`. The kinds of read are interleaved evenly,

@@ -35,9 +35,16 @@ final class Trace(val runId: String) {
 
   val sparkListener: SparkListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val cs = submitSite().orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
-        .getOrElse("?")
-      jobs.put(e.jobId, Job(e.jobId, cs, e.time, -1L, e.stageIds))
+      // Spark's own call site is exact, since it is taken when the job is
+      // submitted, unless a streaming query has stamped its own over it.
+      // Then the site is read from the submitting thread's stack, which is
+      // only right while this job is still running: see Job.callSite.
+      val stamped = Option(e.properties).exists(_.getProperty("callSite.short") != null)
+      val job =
+        if (stamped) Job(e.jobId, submitSite(), System.currentTimeMillis(), e.time, -1L, e.stageIds)
+        else Job(e.jobId, e.stageInfos.sortBy(_.stageId).lastOption.map(_.name), e.time, e.time,
+          -1L, e.stageIds)
+      jobs.put(e.jobId, job)
       e.stageIds.foreach(s => stages.putIfAbsent(s, new StageAcc(s)))
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -206,8 +213,14 @@ object Trace {
     var doneMs = 0L
   }
 
-  final case class Job(id: Int, callSite: String, startMs: Long, var endMs: Long,
-      stageIds: Seq[Int]) {
+  /** A job and the call site read for it at `siteMs` (its start, when
+    * Spark's own call site is used). */
+  final case class Job(id: Int, site: Option[String], siteMs: Long, startMs: Long,
+      var endMs: Long, stageIds: Seq[Int]) {
+    /** The call site, or "?" when none was found or it was read after the
+      * job ended: the submitting thread may have moved on to the next job
+      * by then, so the site read may belong to another job. */
+    def callSite: String = site.filter(_ => siteMs <= startMs || siteMs < endMs).getOrElse("?")
     /** Source file of the innermost non-Spark frame, e.g. `Merge.scala`. */
     def file: String = Trace.FileRe.findFirstMatchIn(callSite).map(_.group(1)).getOrElse("?")
     /** The Spark operation at the call site, e.g. `parquet` or `collect`. */

@@ -13,35 +13,37 @@ import graft.registry.SchemaKey
   * clock), so two builds compared on one seed do identical work. The
   * constants give about `seconds` of timed work on a 4-core host. */
 final case class Sizes(
+    /** events of the bulk log, replayed as one epoch */
     bulkEvents: Long,
-    bulkEpochs: Int,
     replays: Int,
-    warmEvents: Long,
     setupReps: Int,
     baseEvents: Long,
     files: Int,
     perFile: Int,
-    read: Reads.Plan,
-    /** read passes after the tail's drain; bulk reads once after each
-      * measured replay */
-    readPasses: Int,
+    /** the read pass after each bulk replay */
+    bulkRead: Reads.Plan,
+    /** each of the `tailReadPasses` read passes after the tail's drain */
+    tailRead: Reads.Plan,
+    tailReadPasses: Int,
     sliceReps: Int)
 
 object Sizes {
   def of(seconds: Int): Sizes = {
     def scaled(n: Int, min: Int) = math.max(min, math.round(n * seconds / 25.0).toInt)
-    Sizes(bulkEvents = 90000L, bulkEpochs = 3, replays = scaled(3, 3), warmEvents = 5000L,
-      setupReps = 3, baseEvents = 10000L, files = scaled(8, 2), perFile = 1000,
-      read = Reads.Plan(feeds = 6, probes = 100, scans = 2, loads = 1), readPasses = 2,
+    Sizes(bulkEvents = 150000L, replays = scaled(4, 2), setupReps = 3,
+      baseEvents = 10000L, files = scaled(12, 2), perFile = 1000,
+      bulkRead = Reads.Plan(feeds = 4, probes = 30, scans = 1, loads = 1),
+      tailRead = Reads.Plan(feeds = 4, probes = 40, scans = 2, loads = 1), tailReadPasses = 2,
       sliceReps = 3)
   }
 
   /** Toy sizes for the smoke test. */
-  def smoke: Sizes =
-    Sizes(bulkEvents = 3000L, bulkEpochs = 1, replays = 3, warmEvents = 1000L, setupReps = 1,
-      baseEvents = 2000L, files = 2, perFile = 300,
-      read = Reads.Plan(feeds = 1, probes = 10, scans = 1, loads = 1), readPasses = 1,
-      sliceReps = 1)
+  def smoke: Sizes = {
+    val read = Reads.Plan(feeds = 1, probes = 10, scans = 1, loads = 1)
+    Sizes(bulkEvents = 3000L, replays = 2, setupReps = 1,
+      baseEvents = 2000L, files = 2, perFile = 300, bulkRead = read, tailRead = read,
+      tailReadPasses = 1, sliceReps = 1)
+  }
 }
 
 object Workloads {
@@ -52,13 +54,6 @@ object Workloads {
     * a run's fixed per-epoch cost inside the benchmark's time budget. */
   val Buckets = 16
   private val WarmSeed = 0x5eedL
-
-  /** Event ranges of a log written with `epochs` epochs (LogGen.writeLog's split). */
-  def epochRanges(n: Long, epochs: Int, v1Cut: Long): Vector[Inputs.Range] = {
-    val per = math.max(1L, (n + epochs - 1) / epochs)
-    Vector.tabulate(epochs)(e => Inputs.Range(e * per, math.min((e + 1) * per, n), v1Cut))
-      .filter(r => r.until > r.from)
-  }
 
   /** Timed setup repetitions: `build(i)` writes the pre-state into a fresh
     * directory; the first repetition also warms the JVM. Returns the median
@@ -104,55 +99,43 @@ object Workloads {
 
   // ---------------------------------------------------------------- bulk
 
-  /** Batch replay of a 3-epoch log into fresh tables, each followed by a
-    * read pass over the replayed table. The first replay and its reads
-    * only warm up. */
-  def bulk(ctx: Ctx, inputs: Path, seed: Long, sz: Sizes, traced: Boolean): Map[String, Double] = {
+  /** Batch replay of a log into fresh tables, each followed by a read pass
+    * over the replayed table. Setup replays the same log, which warms the
+    * JVM at full size; the read paths warm up once, on the last setup table. */
+  def bulk(ctx: Ctx, seed: Long, sz: Sizes, traced: Boolean): Map[String, Double] = {
     val spark = ctx.spark
-    val ranges = epochRanges(sz.bulkEvents, sz.bulkEpochs, v1Cut = sz.bulkEvents)
-    val name = s"bulk-s$seed-n${sz.bulkEvents}-e${sz.bulkEpochs}"
-    val log = Inputs.cached(inputs, name) { d =>
-      Inputs.writeLog(spark, d, seed, 0L, sz.bulkEvents, sz.bulkEpochs)
-    }.toString
-    // the warm-up log does not depend on the seed: one per size
-    val warmLog = Inputs.cached(inputs, s"warm-n${sz.warmEvents}") { d =>
-      Inputs.writeLog(spark, d, WarmSeed, 0L, sz.warmEvents, 1)
-    }.toString
-    // epoch 0 of the log on its own, for the traced run's slices
-    def epoch0 = Inputs.cached(inputs, s"$name-epoch0") { d =>
-      Inputs.writeLog(spark, d, seed, 0L, ranges.head.until, 1)
-    }.toString
+    val ranges = Vector(Inputs.Range(0L, sz.bulkEvents, v1Cut = sz.bulkEvents))
+    // inputs are generated afresh each run, so every run warms up alike
+    val inputs = ctx.work.resolve("inputs")
+    val log = inputs.resolve("log").toString
+    ctx.phase("inputs")(Inputs.writeLog(spark, inputs.resolve("log"), seed, 0L, sz.bulkEvents, 1))
     val oracle = new Inputs.Oracle(seed, ranges)
     val ids = ranges.indices.map(e => s"replay-$e")
 
     val (setupS, warmTable) = setup(ctx, sz.setupReps, "warm") { d =>
-      Replay.replayLog(spark, warmLog, d.toString, buckets = Buckets,
-        pruneBuckets = false)
+      Replay.replayLog(spark, log, d.toString, buckets = Buckets, pruneBuckets = false)
     }
+    Reads.warmup(ctx, warmTable.toString, windows(warmTable.toString, ids, oracle.distinctKeys),
+      oracle, seed)
     Util.delete(warmTable)
 
     val host = new Host.Window
     val reads = new Reads.Samples
     var table = ""
-    var untracedMs = Double.NaN
     val replays = ctx.phase("replays and reads")((1 to sz.replays).flatMap { r =>
       if (table.nonEmpty) Util.delete(java.nio.file.Paths.get(table))
       table = ctx.work.resolve(s"bulk-$r").toString
-      // replay 1 warms the JIT and the read paths and is not measured; in
-      // the traced run replay 2 runs untraced, the tracing-overhead base
-      val warm = r == 1
-      val untraced = traced && r == 2
-      val res = ctx.untracedIf(warm || untraced) {
+      // in the traced run odd replays run untraced: the tracing-overhead base
+      val untraced = traced && r % 2 == 1
+      val res = ctx.untracedIf(untraced) {
         ctx.timedOp("Replay.replayLog") {
           Replay.replayLog(spark, log, table, buckets = Buckets, pruneBuckets = false)
         }(res => res.epochs == ranges.size && res.stats.forall(_.applied))
       }
       ledgerCheck(ctx, table, ids)
-      val w = windows(table, ids, oracle.distinctKeys)
-      if (warm) Reads.warmup(ctx, table, w, oracle, seed)
-      else Reads.pass(ctx, table, w, oracle, sz.read, seed + r, reads)
-      res.filterNot(_ => warm).map { case (_, ms) =>
-        if (untraced) untracedMs = ms
+      Reads.pass(ctx, table, windows(table, ids, oracle.distinctKeys), oracle, sz.bulkRead,
+        seed + r, reads)
+      res.map { case (_, ms) =>
         val commits = IceLite.history(table).map(v => IceLite.commitTimeOf(table, v).toDouble)
         (ms, commits.zip(commits.tail).map { case (a, b) => b - a }, untraced)
       }
@@ -170,15 +153,17 @@ object Workloads {
       if (!traced) Map.empty[String, Double]
       else {
         val tracedMs = replays.filterNot(_._3).map(_._1)
+        val untracedMs = replays.filter(_._3).map(_._1)
         val t = ctx.trace.get
         Layers.settle(t)
-        Layers.epochs(t, _.name == "Replay.replayLog", _ => ranges.size,
+        Layers.epochs(ctx, t, _.name == "Replay.replayLog", _ => ranges.size,
           sz.bulkEvents * tracedMs.size) ++
           lineageStats(ctx, table, ids) ++
           writeStats(table, ids, Util.dirBytes(java.nio.file.Paths.get(log))) ++
-          slices(ctx, epoch0, sz.sliceReps) ++
-          Map("trace.overhead_pct" -> 100.0 * (Util.median(tracedMs) / untracedMs - 1.0)) ++
-          scaling(ctx, warmLog, epoch0)
+          slices(ctx, log, sz.sliceReps) ++
+          Map("trace.overhead_pct" ->
+            100.0 * (Util.median(tracedMs) / Util.median(untracedMs) - 1.0)) ++
+          scaling(ctx, inputs.resolve("scale-warm"), log)
       }
     e2e ++ reads.metrics ++ hostM ++ layers
   }
@@ -188,12 +173,12 @@ object Workloads {
   /** A base table, then Tail.start draining a backlog of small files one
     * file per micro-batch, with the v1 -> v2 schema change mid-backlog; then
     * the read side of the resulting merge-on-read table. */
-  def tail(ctx: Ctx, inputs: Path, seed: Long, sz: Sizes, traced: Boolean): Map[String, Double] = {
+  def tail(ctx: Ctx, seed: Long, sz: Sizes, traced: Boolean): Map[String, Double] = {
     val spark = ctx.spark
-    val in = Inputs.cached(inputs,
-        s"tail-s$seed-b${sz.baseEvents}-f${sz.files}x${sz.perFile}") { d =>
-      Inputs.writeLog(spark, d.resolve("base"), seed, 0L, sz.baseEvents, 1)
-      Inputs.writeBacklog(spark, d.resolve("backlog"), seed, sz.baseEvents, sz.files,
+    val in = ctx.work.resolve("inputs")
+    ctx.phase("inputs") {
+      Inputs.writeLog(spark, in.resolve("base"), seed, 0L, sz.baseEvents, 1)
+      Inputs.writeBacklog(spark, in.resolve("backlog"), seed, sz.baseEvents, sz.files,
         sz.perFile, v1Fraction = 0.5)
     }
     val backlogEvents = sz.files.toLong * sz.perFile
@@ -233,42 +218,54 @@ object Workloads {
     }
 
     val host = new Host.Window
-    // the traced run drains its first half untraced: the tracing-overhead base
-    val (plain, rest) = if (traced) backlog.splitAt(backlog.size / 2) else (Seq.empty, backlog)
-    val (untraced, main) = ctx.phase("write")(
-      (if (plain.nonEmpty) ctx.untracedIf(true)(drain(plain)) else None, drain(rest)))
+    // the traced run drains the backlog in four chunks, untraced and traced
+    // in turn, so the tracing-overhead base covers like batches: v1 and v2
+    // events, early and late in the run
+    val chunks =
+      if (!traced) Seq((backlog, false))
+      else backlog.grouped(math.max(1, (backlog.size + 3) / 4)).toSeq.zipWithIndex
+        .map { case (c, i) => (c, i % 2 == 0) }
+    val drains = ctx.phase("write")(chunks.flatMap { case (c, plain) =>
+      ctx.untracedIf(plain)(drain(c)).map { case (ps, ms) => (ps, ms, plain) }
+    })
     val batchIds = backlog.indices.map(b => s"${Tail.sourceId(ckpt)}-$b")
     ledgerCheck(ctx, table, "replay-0" +: batchIds)
     val reads = new Reads.Samples
     ctx.phase("reads") {
       val w = windows(table, batchIds, oracle.distinctKeys.tail)
       Reads.warmup(ctx, table, w, oracle, seed)
-      (1 to sz.readPasses).foreach(i => Reads.pass(ctx, table, w, oracle, sz.read, seed + i, reads))
+      (1 to sz.tailReadPasses).foreach(i =>
+        Reads.pass(ctx, table, w, oracle, sz.tailRead, seed + i, reads))
     }
     val hostM = host.stop()
 
-    val drains = untraced.toSeq ++ main.toSeq
     val batchMs = drains.flatMap(_._1.map(_.batchDuration.toDouble))
     println(s"perfbench: batch ms ${batchMs.map(_.toLong).mkString(" ")}")
     val e2e = Map(
       "setup_s" -> setupS,
-      "events_per_s" -> (plain.size + rest.size) * sz.perFile / (drains.map(_._2).sum / 1000.0),
+      "events_per_s" -> backlogEvents / (drains.map(_._2).sum / 1000.0),
       "epoch_p50_ms" -> Util.median(batchMs))
     val layers =
       if (!traced) Map.empty[String, Double]
       else {
         val t = ctx.trace.get
-        Layers.settle(t, batchSpans = rest.size)
-        def medianBatch(d: Option[(Seq[StreamingQueryProgress], Double)]) =
-          Util.median(d.toSeq.flatMap(_._1.map(_.batchDuration.toDouble)))
-        // progress events of the untraced half may reach the re-added listener
-        val tracedIds = main.toSeq.flatMap(_._1.map(_.batchId.toDouble)).toSet
-        Layers.epochs(t, s => s.name == "Tail.batch" && s.attrs.get("batchId").exists(tracedIds),
-          _ => 1, rest.size.toLong * sz.perFile) ++
+        val tracedPs = drains.filterNot(_._3).flatMap(_._1)
+        Layers.settle(t, batchSpans = tracedPs.size)
+        // progress events of an untraced chunk may reach the re-added listener
+        val tracedIds = tracedPs.map(_.batchId.toDouble).toSet
+        // the overhead compares batches without inline COW compaction only
+        val cow = Lineage.read(spark, table).where(col("cowBuckets") > 0)
+          .select("epochId").collect().map(_.getString(0)).toSet
+        def medianBatch(plain: Boolean) = Util.median(drains.filter(_._3 == plain).flatMap(_._1)
+          .filterNot(p => cow(s"${Tail.sourceId(ckpt)}-${p.batchId}"))
+          .map(_.batchDuration.toDouble))
+        Layers.epochs(ctx, t,
+          s => s.name == "Tail.batch" && s.attrs.get("batchId").exists(tracedIds),
+          _ => 1, tracedPs.map(_.numInputRows).sum) ++
           lineageStats(ctx, table, batchIds) ++
           writeStats(table, batchIds, backlog.map(Files.size).sum) ++
           slices(ctx, backlog.head.toString, sz.sliceReps) ++
-          Map("trace.overhead_pct" -> 100.0 * (medianBatch(main) / medianBatch(untraced) - 1.0),
+          Map("trace.overhead_pct" -> 100.0 * (medianBatch(false) / medianBatch(true) - 1.0),
             "replay.scaling_eff_1to4" -> 0.0)
       }
     e2e ++ reads.metrics ++ hostM ++ layers
@@ -320,8 +317,9 @@ object Workloads {
   }
 
   /** One bulk epoch replayed at local[1] against local[cores]: the time
-    * ratio over the core count. Restarts the session, so it runs last. */
-  def scaling(ctx: Ctx, warmLog: String, epochLog: String): Map[String, Double] = {
+    * ratio over the core count. Restarts the session, so it runs last; a
+    * small log written to `warmLog` warms the new session first. */
+  def scaling(ctx: Ctx, warmLog: Path, epochLog: String): Map[String, Double] = {
     def replayS(tag: String): Double = {
       val dir = ctx.work.resolve(s"scale-$tag")
       val r = ctx.timedOp("scale.replayLog") {
@@ -334,8 +332,10 @@ object Workloads {
     val tn = Util.median(Seq(replayS("n1"), replayS("n2")))
     ctx.spark.stop()
     ctx.spark = Main.session(ctx.work, 1)
+    Inputs.writeLog(ctx.spark, warmLog, WarmSeed, 0L, 5000L, 1)
     val warm = ctx.work.resolve("scale-warm")
-    Replay.replayLog(ctx.spark, warmLog, warm.toString, buckets = Buckets, pruneBuckets = false)
+    Replay.replayLog(ctx.spark, warmLog.toString, warm.toString, buckets = Buckets,
+      pruneBuckets = false)
     Util.delete(warm)
     val t1 = replayS("1")
     Map("replay.scaling_eff_1to4" -> t1 / (n * tn))
