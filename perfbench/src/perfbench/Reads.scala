@@ -23,6 +23,9 @@ object Reads {
     val load, feed, lookup, scan = scala.collection.mutable.ArrayBuffer.empty[Double]
     var shape: Map[String, Double] = Map.empty
 
+    def summary: String =
+      s"scan ms ${scan.map(_.toLong).mkString(" ")}, feed ms ${feed.map(_.toLong).mkString(" ")}"
+
     def metrics: Map[String, Double] = shape ++ Map(
       "feed_read_p50_ms" -> Util.median(feed.toSeq),
       "lookup_p50_ms" -> Util.median(lookup.toSeq),
@@ -35,7 +38,7 @@ object Reads {
     * small pass whose timings are dropped. */
   def warmup(ctx: Ctx, table: String, windows: Seq[Window], oracle: Inputs.Oracle,
       probeSeed: Long): Unit =
-    pass(ctx, table, windows.take(1), oracle, Plan(feeds = 2, probes = 30, scans = 2,
+    pass(ctx, table, windows.take(1), oracle, Plan(feeds = 2, probes = 30, scans = 3,
       loads = 1), ~probeSeed, new Samples)
 
   /** One timed pass over `table`. The kinds of read are interleaved evenly,

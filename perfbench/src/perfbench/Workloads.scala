@@ -10,8 +10,8 @@ import graft.lake.{IceLite, Merge}
 import graft.registry.SchemaKey
 
 /** Work per run. Sizes are fixed per `--seconds` (not measured against the
-  * clock), so two builds compared on one seed do identical work. The
-  * constants give about `seconds` of timed work on a 4-core host. */
+  * clock), so two builds compared on one seed do identical work. At
+  * `--seconds 25` the constants give 30-40 s of timed work on a 4-core host. */
 final case class Sizes(
     /** events of the bulk log, replayed as one epoch */
     bulkEvents: Long,
@@ -30,11 +30,11 @@ final case class Sizes(
 object Sizes {
   def of(seconds: Int): Sizes = {
     def scaled(n: Int, min: Int) = math.max(min, math.round(n * seconds / 25.0).toInt)
-    Sizes(bulkEvents = 150000L, replays = scaled(4, 2), setupReps = 3,
+    Sizes(bulkEvents = 150000L, replays = scaled(5, 2), setupReps = 2,
       baseEvents = 10000L, files = scaled(12, 2), perFile = 1000,
-      bulkRead = Reads.Plan(feeds = 4, probes = 30, scans = 1, loads = 1),
-      tailRead = Reads.Plan(feeds = 4, probes = 40, scans = 2, loads = 1), tailReadPasses = 2,
-      sliceReps = 3)
+      bulkRead = Reads.Plan(feeds = 4, probes = 30, scans = 2, loads = 1),
+      tailRead = Reads.Plan(feeds = 4, probes = 75, scans = 5, loads = 1), tailReadPasses = 2,
+      sliceReps = 2)
   }
 
   /** Toy sizes for the smoke test. */
@@ -145,6 +145,7 @@ object Workloads {
     val replayMs = replays.map(_._1)
     println(s"perfbench: replay ms ${replayMs.map(_.toLong).mkString(" ")}, epoch ms " +
       replays.flatMap(_._2).map(_.toLong).mkString(" "))
+    println(s"perfbench: ${reads.summary}")
     val e2e = Map(
       "setup_s" -> setupS,
       "events_per_s" -> sz.bulkEvents / (Util.median(replayMs) / 1000.0),
@@ -241,6 +242,7 @@ object Workloads {
 
     val batchMs = drains.flatMap(_._1.map(_.batchDuration.toDouble))
     println(s"perfbench: batch ms ${batchMs.map(_.toLong).mkString(" ")}")
+    println(s"perfbench: ${reads.summary}")
     val e2e = Map(
       "setup_s" -> setupS,
       "events_per_s" -> backlogEvents / (drains.map(_._2).sum / 1000.0),
