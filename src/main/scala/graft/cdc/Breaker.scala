@@ -4,9 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import graft.decode.{ChangeEvent, Decode}
+import graft.decode.Decode
 import graft.lake.{IceLite, Merge}
-import graft.registry.SchemaKey
 
 /** POISON-BATCH CIRCUIT BREAKER — the safety valve between per-event
   * routing and the table. Dead-letter routing (q49) is the right answer
@@ -46,12 +45,8 @@ object Breaker {
       .toSeq.sorted
   }
 
-  private def events(spark: SparkSession, logDir: String, e: Long) = {
-    import spark.implicits._
-    spark.read.parquet(logDir).filter(col("epoch") === e)
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[ChangeEvent]
-  }
+  private def events(spark: SparkSession, logDir: String, e: Long) =
+    Epoch.events(spark.read.parquet(logDir).filter(col("epoch") === e))
 
   /** Replay every epoch of `logDir`, refusing any whose bad-route fraction
     * strictly exceeds `maxBadFraction` (an epoch AT the threshold applies —
@@ -63,14 +58,9 @@ object Breaker {
       s"maxBadFraction must be in [0, 1): $maxBadFraction")
     if (!IceLite.exists(tableDir)) Replay.createTable(tableDir, buckets)
     val registry = spark.sparkContext.broadcast(Cdc.registry)
-    val epochs = Files.list(Paths.get(logDir)).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("epoch=") => s.stripPrefix("epoch=").toLong }
-      .toVector.sorted
-    epochs.map { e =>
+    val verdicts = Epoch.list(logDir).map { e =>
       val ev = events(spark, logDir, e)
-      val counts = Decode.decode(ev, registry, SchemaKey(Cdc.SchemaId, -1),
-          Cdc.MessageType)
+      val counts = Decode.decode(ev, registry, Epoch.DefaultKey, Cdc.MessageType)
         .groupBy("route").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val total = counts.values.sum
@@ -79,19 +69,13 @@ object Breaker {
         Files.createDirectories(qDir(tableDir))
         Files.write(marker(tableDir, e),
           s"""{"epoch":$e,"total":$total,"bad":$bad}""".getBytes("UTF-8"))
-        EpochVerdict(e, total, bad, quarantined = true)
-      } else {
-        val batch = Replay.decodeForMerge(ev, registry, Some(s"$tableDir/_deadletter"))
-        val keys = Some(Decode.decodeKeys(ev, registry,
-          SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType, Seq("repo", "path")))
-        val st = Merge.mergeEpoch(spark, tableDir, batch.updates, "seq", "op",
-          s"$namespace-$e", keys)
-        // fenced: recover letters a crashed prior attempt may not have
-        // flushed (idempotent write — duplicates are skipped by identity)
-        if (st.applied) batch.flushDeadLetters() else batch.flushDeadLettersDirect()
-        EpochVerdict(e, total, bad, quarantined = false)
-      }
+        (EpochVerdict(e, total, bad, quarantined = true), None)
+      } else
+        (EpochVerdict(e, total, bad, quarantined = false),
+          Epoch(ev, registry, tableDir, s"$namespace-$e"))
     }
+    Lineage.appendAll(spark, tableDir, verdicts.flatMap(_._2))
+    verdicts.map(_._1)
   }
 
   /** Operator-confirmed release of a quarantined epoch: the NORMAL decode
@@ -103,15 +87,10 @@ object Breaker {
     require(Files.exists(marker(tableDir, epoch)),
       s"epoch $epoch is not quarantined for $tableDir")
     val registry = spark.sparkContext.broadcast(Cdc.registry)
-    val ev = events(spark, logDir, epoch)
-    val batch = Replay.decodeForMerge(ev, registry,
-      Some(s"$tableDir/_deadletter"))
-    val keys = Some(Decode.decodeKeys(ev, registry,
-      SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType, Seq("repo", "path")))
-    val st = Merge.mergeEpoch(spark, tableDir, batch.updates, "seq", "op",
-      s"$namespace-$epoch", keys)
-    if (st.applied) batch.flushDeadLetters() else batch.flushDeadLettersDirect()
+    val id = s"$namespace-$epoch"
+    val applied = Epoch(events(spark, logDir, epoch), registry, tableDir, id)
+    Lineage.appendAll(spark, tableDir, applied.toSeq)
     Files.deleteIfExists(marker(tableDir, epoch))
-    st
+    Epoch.stats(id, applied)
   }
 }

@@ -106,8 +106,7 @@ object CdcCli {
       import spark.implicits._
       val registry = spark.sparkContext.broadcast(Cdc.registry)
       val ev = spark.read.parquet(logDir)
-        .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-        .as[graft.decode.ChangeEvent]
+        .transform(Epoch.events)
       val t0 = System.nanoTime()
       val n = graft.decode.Decode.decode(ev, registry,
         graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType)

@@ -1,11 +1,11 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.decode.{ChangeEvent, Decode}
-import graft.lake.{IceLite, Merge}
-import graft.registry.SchemaKey
-import scala.jdk.CollectionConverters._
+import graft.lake.IceLite
+import graft.registry.DescriptorRegistry
 
 /** INGEST-TIME ROW EXPECTATIONS — declarative CHECK constraints evaluated
   * on every decoded change event BEFORE it reaches the table, the
@@ -28,22 +28,28 @@ import scala.jdk.CollectionConverters._
   * folds exactly that. Violations of several rules report every failed
   * rule name (comma-joined in declaration order).
   *
-  * Exactly-once: the merge fences per epoch as usual; expectation dead
-  * letters flush only when the epoch actually applied, so a replayed
-  * epoch neither re-merges nor duplicates its dead letters.
+  * Shared path: every enforcing caller — batch replay, quarantine
+  * release, rule retry and the streaming [[Tail]] — computes the
+  * violating (partition, offset, failed_rules) set with [[violations]]
+  * and hands it to [[Epoch.apply]], the one decode → MERGE sequence. There
+  * the conforming events (the raw events anti-joined against the
+  * violations) run the normal decode → keys pre-pass → MERGE, the
+  * violations dead-letter with the ORIGINAL payload, and the epoch's
+  * lineage row counts them under route `expectation`.
+  *
+  * Exactly-once: the merge fences per epoch as usual; a fenced epoch
+  * writes no lineage row and its dead-letter flushes dedup by event
+  * identity, so a replayed epoch neither re-merges nor duplicates its dead
+  * letters.
   *
   * Scale shape: the rule pass is one decode + a narrow filter whose
-  * violating (partition, offset, failed_rules) projection is
-  * localCheckpointed — O(violations), and the conforming side anti-joins
-  * the raw events against it (broadcast-size in any healthy pipeline:
-  * violations ≫ events means the contract, not the engine, is the
-  * problem). The conforming events then run the normal
-  * [[Replay.decodeForMerge]] → [[Merge.mergeEpoch]] path unchanged. Like
-  * the dead-letter flush itself (decodeForMerge re-decodes the failed
-  * subset), the gate pays a second decode for composing the public
-  * operators unmodified; the fused form — rules evaluated as a fourth
-  * route inside the decode pass — is the single-decode production shape
-  * and changes nothing observable. */
+  * violating projection is localCheckpointed — O(violations), and the
+  * conforming side anti-joins the raw events against it (broadcast-size
+  * in any healthy pipeline: violations ≫ events means the contract, not
+  * the engine, is the problem). The gate pays a second decode for
+  * composing the public operators unmodified; the fused form — rules
+  * evaluated as a fourth route inside the decode pass — is the
+  * single-decode production shape and changes nothing observable. */
 object Expectations {
 
   /** name → SQL predicate over the decoded row (NULL/false = violation). */
@@ -83,37 +89,28 @@ object Expectations {
       .select(col("partition"), col("offset"), col("failed_rules"))
   }
 
-  /** Append `viol` as SELF-CONTAINED dead letters (route='expectation',
-    * per-rule attribution, the ORIGINAL payload + schema refs from
-    * `originals` so [[Replay.retryDeadLetters]] can re-decode them later).
-    * The ONE projection every enforcement path shares — batch replay,
-    * quarantine release, and the streaming Tail — so the dead-letter store
-    * schema can never fork between them. Returns rows written. */
-  private[cdc] def writeDeadLetters(viol: DataFrame, originals: DataFrame,
-      tableDir: String): Long = {
-    val n = viol.count()
-    if (n > 0) {
-      val dld = s"$tableDir/_deadletter"
-      val letters = viol.join(
-        originals.select("partition", "offset", "payload",
-          "schemaId", "schemaVersion", "messageType"),
-        Seq("partition", "offset"))
-        .select(lit(Route).as("route"), col("failed_rules").as("error"),
-          col("partition"), col("offset"), col("payload"),
-          col("schemaId"), col("schemaVersion"), col("messageType"))
-      // idempotent by event identity, like the decode-route store: a
-      // fenced-replay recovery flush must not duplicate letters
-      val fresh =
-        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dld)))
-          letters.join(
-            viol.sparkSession.read.parquet(dld)
-              .select("partition", "offset").distinct(),
-            Seq("partition", "offset"), "left_anti")
-        else letters
-      fresh.write.mode("append").parquet(dld)
-    }
-    n
-  }
+  /** The (partition, offset, failed_rules) violations of `rules` among
+    * `events`, decoded under the default reader schema and pinned
+    * (localCheckpoint) — the input [[Epoch.apply]] splits an epoch by. */
+  private[cdc] def violations(events: Dataset[ChangeEvent],
+      registry: Broadcast[DescriptorRegistry], rules: Seq[Rule]): DataFrame =
+    violationsOf(Decode.success(
+      Decode.decode(events, registry, Epoch.DefaultKey, Cdc.MessageType)), rules)
+      .localCheckpoint()
+
+  /** SELF-CONTAINED dead-letter rows for `viol` (route='expectation',
+    * per-rule attribution, the ORIGINAL payload + schema refs joined back
+    * from `originals` so [[Replay.retryDeadLetters]] can re-decode them
+    * later). The ONE projection every enforcement path shares, so the
+    * dead-letter store schema can never fork between them. */
+  private[cdc] def letterRows(viol: DataFrame, originals: DataFrame): DataFrame =
+    viol.join(
+      originals.select("partition", "offset", "payload",
+        "schemaId", "schemaVersion", "messageType"),
+      Seq("partition", "offset"))
+      .select(lit(Route).as("route"), col("failed_rules").as("error"),
+        col("partition"), col("offset"), col("payload"),
+        col("schemaId"), col("schemaVersion"), col("messageType"))
 
   /** Replay `logDir` into `tableDir` with `rules` enforced per event.
     *
@@ -139,26 +136,17 @@ object Expectations {
       namespace: String = "expect",
       maxViolationFraction: Option[Double] = None): ExpectationStats = {
     require(rules.nonEmpty, "no rules — use Replay.replayLog")
-    import spark.implicits._
     if (!IceLite.exists(tableDir)) Replay.createTable(tableDir, buckets)
     val log = spark.read.parquet(logDir)
     val registry = spark.sparkContext.broadcast(Cdc.registry)
-    val key = SchemaKey(Cdc.SchemaId, -1)
-    val epochs = java.nio.file.Files.list(java.nio.file.Paths.get(logDir))
-      .iterator().asScala.map(_.getFileName.toString)
-      .collect { case s if s.startsWith("epoch=") => s.stripPrefix("epoch=").toLong }
-      .toVector.sorted
-    var nViol = 0L
-    epochs.foreach { e =>
-      val raw = log.filter(col("epoch") === e)
-      val ev = raw
-        .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-        .as[ChangeEvent]
-      // rule pass: failed_rules per decoded UPSERT row, violations only
-      val decoded = Decode.success(Decode.decode(ev, registry, key, Cdc.MessageType))
-      val viol = violationsOf(decoded, rules).localCheckpoint()
+    val epochs = Epoch.list(logDir)
+    val applied = epochs.flatMap { e =>
+      val ev = Epoch.events(log.filter(col("epoch") === e))
+      val viol = violations(ev, registry, rules)
       val guardTripped = maxViolationFraction.exists { f =>
-        val nUpserts = decoded.filter(col("op") === "UPSERT").count()
+        val nUpserts = Decode.success(
+            Decode.decode(ev, registry, Epoch.DefaultKey, Cdc.MessageType))
+          .filter(col("op") === "UPSERT").count()
         val nBad = viol.count()
         val tripped = nUpserts > 0 && nBad.toDouble > f * nUpserts
         if (tripped) {
@@ -169,31 +157,15 @@ object Expectations {
         }
         tripped
       }
-      if (!guardTripped) {
-        val conformEv = ev.toDF()
-          .join(viol.select("partition", "offset"), Seq("partition", "offset"), "left_anti")
-          .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-          .as[ChangeEvent]
-        val batch = Replay.decodeForMerge(conformEv, registry, Some(s"$tableDir/_deadletter"))
-        // keys-only pre-pass (wire-skipped): touched-bucket pruning + the
-        // scale-adaptive merge task sizing, same as the replay/tail paths
-        val keys = Some(Decode.decodeKeys(conformEv, registry,
-          SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType, Seq("repo", "path")))
-        val st = Merge.mergeEpoch(spark, tableDir, batch.updates, "seq", "op",
-          s"$namespace-$e", keys)
-        if (st.applied) {
-          batch.flushDeadLetters()
-          nViol += writeDeadLetters(viol, raw, tableDir)
-        } else {
-          // fenced replay: recover letters a crashed prior attempt may not
-          // have flushed — both writes are idempotent by event identity
-          batch.flushDeadLettersDirect()
-          writeDeadLetters(viol, raw, tableDir)
-        }
-      }
+      if (guardTripped) None
+      else Epoch(ev, registry, tableDir, s"$namespace-$e", violations = Some(viol))
     }
-    ExpectationStats(epochs.length, nViol)
+    Lineage.appendAll(spark, tableDir, applied)
+    ExpectationStats(epochs.length, applied.map(violated).sum)
   }
+
+  /** Expectation-route count of an applied epoch's lineage entry. */
+  private def violated(e: Lineage.Entry): Long = e.routes.getOrElse(Route, 0L)
 
   /** Operator-confirmed release of an expectation-quarantined epoch under
     * the CURRENT (presumably corrected) rules: the normal per-event split —
@@ -212,35 +184,13 @@ object Expectations {
     require(rules.nonEmpty, "no rules — use Breaker.release")
     require(java.nio.file.Files.exists(Breaker.marker(tableDir, epoch)),
       s"epoch $epoch is not quarantined for $tableDir")
-    import spark.implicits._
     val registry = spark.sparkContext.broadcast(Cdc.registry)
-    val key = SchemaKey(Cdc.SchemaId, -1)
-    val raw = spark.read.parquet(logDir).filter(col("epoch") === epoch)
-    val ev = raw
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[ChangeEvent]
-    val viol = violationsOf(
-      Decode.success(Decode.decode(ev, registry, key, Cdc.MessageType)), rules)
-      .localCheckpoint()
-    val conformEv = ev.toDF()
-      .join(viol.select("partition", "offset"), Seq("partition", "offset"), "left_anti")
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[ChangeEvent]
-    val batch = Replay.decodeForMerge(conformEv, registry, Some(s"$tableDir/_deadletter"))
-    val keys = Some(Decode.decodeKeys(conformEv, registry,
-      SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType, Seq("repo", "path")))
-    val st = Merge.mergeEpoch(spark, tableDir, batch.updates, "seq", "op",
-      s"$namespace-$epoch", keys)
-    var n = 0L
-    if (st.applied) {
-      batch.flushDeadLetters()
-      n = writeDeadLetters(viol, raw, tableDir)
-    } else {
-      batch.flushDeadLettersDirect() // crash-recovery, idempotent
-      writeDeadLetters(viol, raw, tableDir)
-    }
+    val ev = Epoch.events(spark.read.parquet(logDir).filter(col("epoch") === epoch))
+    val applied = Epoch(ev, registry, tableDir, s"$namespace-$epoch",
+      violations = Some(violations(ev, registry, rules)))
+    Lineage.appendAll(spark, tableDir, applied.toSeq)
     java.nio.file.Files.deleteIfExists(Breaker.marker(tableDir, epoch))
-    ExpectationStats(1, n)
+    ExpectationStats(1, applied.map(violated).sum)
   }
 
   /** Retry expectation dead letters after the rules changed (relaxed, or
@@ -261,7 +211,6 @@ object Expectations {
       rules: Seq[Rule],
       epochTag: String): RetryStats = {
     require(rules.nonEmpty, "no rules — use Replay.retryDeadLetters for decode failures")
-    import spark.implicits._
     val dld = s"$tableDir/_deadletter"
     val dldPath = java.nio.file.Paths.get(dld)
     if (!java.nio.file.Files.isDirectory(dldPath))
@@ -272,35 +221,19 @@ object Expectations {
     val attempted = exp.count()
     if (attempted == 0) return RetryStats(0, applied = false, 0, 0)
     val registry = spark.sparkContext.broadcast(Cdc.registry)
-    val key = SchemaKey(Cdc.SchemaId, -1)
-    val ev = exp
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[ChangeEvent]
-    val still = violationsOf(
-      Decode.success(Decode.decode(ev, registry, key, Cdc.MessageType)), rules)
-      .localCheckpoint()
-    val remaining = still.count()
-    val conformEv = ev.toDF()
-      .join(still.select("partition", "offset"), Seq("partition", "offset"), "left_anti")
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[ChangeEvent]
-    val batch = Replay.decodeForMerge(conformEv, registry, None)
-    val st = Merge.mergeEpoch(spark, tableDir, batch.updates, "seq", "op", epochTag,
-      batchRowsHint = Some(math.max(attempted - remaining, 1L)))
+    val ev = Epoch.events(exp)
+    val still = violations(ev, registry, rules)
+    // the store is rewritten below, so the epoch appends no dead letters
+    val applied = Epoch(ev, registry, tableDir, epochTag, deadLetters = false,
+      violations = Some(still))
+    Lineage.appendAll(spark, tableDir, applied.toSeq)
     // FENCED retry (a reused epochTag): the merge applied nothing, so the
     // store must stay untouched — rewriting it would destroy the now-
     // conforming rows unmerged. Retry under a fresh tag instead.
-    if (!st.applied) return RetryStats(attempted, applied = false, 0, attempted)
+    if (applied.isEmpty) return RetryStats(attempted, applied = false, 0, attempted)
     // rebuild: decode-type rows untouched + still-violating expectation
     // rows with attribution refreshed to the CURRENT rule set
-    val keep = dl.filter(col("route") =!= Route).unionByName(
-      still.join(
-        exp.select("partition", "offset", "payload",
-          "schemaId", "schemaVersion", "messageType"),
-        Seq("partition", "offset"))
-        .select(lit(Route).as("route"), col("failed_rules").as("error"),
-          col("partition"), col("offset"), col("payload"),
-          col("schemaId"), col("schemaVersion"), col("messageType")))
+    val keep = dl.filter(col("route") =!= Route).unionByName(letterRows(still, exp))
       .localCheckpoint()
     val keepN = keep.count()
     val stage = java.nio.file.Paths.get(s"$tableDir/.deadletter-expret-$epochTag")
@@ -315,6 +248,6 @@ object Expectations {
       java.nio.file.Files.move(dldPath, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
     org.apache.commons.io.FileUtils.deleteQuietly(old.toFile)
-    RetryStats(attempted, st.applied, st.batchRows, remaining)
+    RetryStats(attempted, applied = true, applied.get.batchRows, violated(applied.get))
   }
 }

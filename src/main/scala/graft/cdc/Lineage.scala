@@ -7,9 +7,11 @@ import graft.lake.Merge.MergeStats
 /** Per-epoch lineage + metrics ledger (north rule: "per-partition lineage +
   * metrics"), appended as a parquet table next to the data. NiFi provenance
   * equivalent (SURVEY.md §1.2). Each entry carries per-ROUTE counts
-  * (success / invalid_schema / error — the dead-letter breakdown) and
-  * per-source-PARTITION event counts, both captured by an accumulator that
-  * rides the merge's own decode pass (zero extra jobs). */
+  * (success / invalid_schema / error — the dead-letter breakdown — plus
+  * expectation when rules ran) and per-source-PARTITION event counts; the
+  * decode routes come from an accumulator that rides the merge's own decode
+  * pass (zero extra jobs). [[Epoch.apply]] yields one entry per applied
+  * epoch on every path that consumes the log. */
 object Lineage {
 
   final case class Entry(
@@ -21,7 +23,7 @@ object Lineage {
       touchedBuckets: Int,
       cowBuckets: Int,
       rewrittenRows: Long,
-      /** decode-route counts: success / invalid_schema / error. */
+      /** route counts: success / invalid_schema / error / expectation. */
       routes: Map[String, Long],
       /** events per source log partition. */
       partitions: Map[Int, Long])
@@ -30,26 +32,13 @@ object Lineage {
     Entry(st.epochId, st.applied, st.batchRows, st.upserts, st.deletes,
       st.touchedBuckets, st.cowBuckets, st.rewrittenRows, acc.byRoute, acc.byPartition)
 
-  def append(spark: SparkSession, tableDir: String, e: Entry): Unit =
-    appendAll(spark, tableDir, Seq(e))
-
-  /** Concurrent appends to ONE _lineage dir share the Hadoop committer's
-    * `_temporary/0` staging dir — the first job's cleanup deletes the second
-    * job's pending task output (the same trap replayLogsConcurrent's
-    * flushLock guards for dead letters). Two tails on one table append
-    * per-batch, so serialize the tiny single-file write PER TABLE DIR
-    * (different tables' staging dirs are disjoint — no need to serialize
-    * across tables). */
-  private val writeLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
+  /** Appends serialize per table with the dead-letter flushes
+    * ([[Epoch.appendLocked]]): two tails on one table append per batch.
+    * The lock holds within one JVM only — appends from separate processes
+    * to one table still share the committer's staging dir. */
   def appendAll(spark: SparkSession, tableDir: String, es: Seq[Entry]): Unit = {
     import spark.implicits._
-    if (es.isEmpty) return
-    val lock = writeLocks.computeIfAbsent(
-      java.nio.file.Paths.get(tableDir).toAbsolutePath.normalize.toString,
-      _ => new Object)
-    lock.synchronized {
+    if (es.nonEmpty) Epoch.appendLocked(tableDir) {
       es.toDS().coalesce(1).write.mode("append").parquet(s"$tableDir/_lineage")
     }
   }

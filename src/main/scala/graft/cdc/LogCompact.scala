@@ -74,8 +74,7 @@ object LogCompact {
     import spark.implicits._
     val log = spark.read.parquet(logDir)
     val ev = log
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[ChangeEvent]
+      .transform(Epoch.events)
     val reg = spark.sparkContext.broadcast(registry.getOrElse(Cdc.registry))
     val decoded = Decode.decode(ev, reg, SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType, framing)
 

@@ -3,14 +3,13 @@ package graft.cdc
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 import graft.decode.{ChangeEvent, Decode, Framing, RouteStatsAccumulator, SparkSchema}
 import graft.lake.{IceLite, Merge}
 import graft.registry.{DescriptorRegistry, SchemaKey}
 
-/** Batch replay of a change log into an IceLite table — epoch loop of
-  * decode → MERGE (SURVEY.md §3.4). Also the shared per-epoch apply used by
-  * the streaming tail's foreachBatch. */
+/** Batch replay of a change log into an IceLite table — the epoch loop
+  * over [[Epoch.apply]]'s decode → MERGE (SURVEY.md §3.4) — plus the
+  * decode-for-merge shaping that apply (and the oracle folds) share. */
 object Replay {
 
   /** The v2 envelope's data fields, for tests and docs. The merge
@@ -34,15 +33,15 @@ object Replay {
     * action itself (read them AFTER the merge). */
   final case class DecodedBatch(
       updates: DataFrame,
-      flushDeadLetters: () => Long,
-      /** [[flushDeadLetters]] WITHOUT the Observation dependency — for the
-        * FENCED-replay path, where `updates` is never consumed (the merge
-        * no-ops) so the observed metric never materializes and the normal
-        * flush would block forever. Pays one direct decode pass; a crashed
-        * prior attempt may already have flushed, so letters can duplicate
-        * (recoverable) — but a crash between its commit and its flush can
-        * no longer LOSE them (unrecoverable). */
-      flushDeadLettersDirect: () => Long,
+      /** Persist this batch's dead letters; call after the merge with
+        * whether it applied. An applied merge carried the non-success count
+        * on its Observation. A FENCED merge never consumed `updates`, so
+        * that metric never materializes (waiting on it would block
+        * forever): the count pays one direct decode pass instead. A crashed
+        * prior attempt may already have flushed; the write dedups by event
+        * identity, and a crash between its commit and its flush can no
+        * longer LOSE letters. Returns the non-success row count. */
+      flushDeadLetters: Boolean => Long,
       routeStats: RouteStatsAccumulator)
 
   /** Decode one epoch's events and shape them for the MERGE: data columns
@@ -50,61 +49,42 @@ object Replay {
     *
     * Dead letters cost ZERO extra decode passes in the happy path: an
     * Observation on the decode output counts non-success rows during the
-    * merge's own action; only when that count is > 0 does the returned
-    * callback re-run decode to persist the dead letters. */
+    * merge's own action; only when that count is > 0 does the flush
+    * re-run decode to persist the dead letters. */
   def decodeForMerge(
       events: Dataset[ChangeEvent],
       registry: Broadcast[DescriptorRegistry],
       deadLetterDir: Option[String],
       framing: Framing.Value = Framing.Raw): DecodedBatch = {
 
-    val defaultKey = SchemaKey(Cdc.SchemaId, -1) // latest version in registry
+    val defaultKey = Epoch.DefaultKey
     val acc = new RouteStatsAccumulator
     events.sparkSession.sparkContext.register(acc, "graft.decode.routeStats")
-    val decoded0 = Decode.decode(events, registry, defaultKey, Cdc.MessageType, framing,
-      stats = Some(acc))
-
+    def decodeAll() = Decode.decode(events, registry, defaultKey, Cdc.MessageType, framing)
     val obs = org.apache.spark.sql.Observation()
-    val decoded = decoded0.observe(obs,
+    val decoded = Decode.decode(events, registry, defaultKey, Cdc.MessageType, framing,
+      stats = Some(acc)).observe(obs,
       sum(when(col("route") =!= "success", 1L).otherwise(0L)).as("bad"))
 
-    def writeLetters(): Unit = deadLetterDir.foreach { dld =>
+    def writeLetters(dld: String): Unit = {
       // SELF-CONTAINED store: the schema refs ride along with the kept
       // original payload (the reference keeps the flowfile's attributes
       // with the routed original, ProtobufProcessor.java:93-106), so a
       // later [[Replay.retryDeadLetters]] can re-decode after a registry
-      // fix without the source log. IDEMPOTENT by event identity
-      // (partition, offset): a re-flush — the fenced-replay recovery path,
-      // or an idempotent whole-replay re-run — skips letters already in
-      // the store instead of appending duplicates.
-      val letters = Decode.deadLetter(
-          Decode.decode(events, registry, defaultKey, Cdc.MessageType, framing))
+      // fix without the source log.
+      Epoch.appendDeadLetters(dld, Decode.deadLetter(decodeAll())
         .join(events.toDF().select("partition", "offset", "schemaId", "schemaVersion", "messageType"),
-          Seq("partition", "offset"))
-      val fresh =
-        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dld)))
-          letters.join(
-            events.sparkSession.read.parquet(dld)
-              .select("partition", "offset").distinct(),
-            Seq("partition", "offset"), "left_anti")
-        else letters
-      fresh.write.mode("append").parquet(dld)
+          Seq("partition", "offset")))
     }
-    val flushDeadLetters: () => Long = () => {
+    val flushDeadLetters: Boolean => Long = merged => {
       // When a batch yields ZERO update rows (all events dead-lettered),
       // AQE's empty-relation propagation eliminates the observed branch and
       // the metric goes missing — in that rare case count dead letters
       // directly rather than silently dropping them.
-      val bad = obs.get.get("bad").collect { case l: Long => l }.getOrElse {
-        Decode.deadLetter(Decode.decode(events, registry, defaultKey, Cdc.MessageType, framing)).count()
-      }
-      if (bad > 0L) writeLetters()
-      bad
-    }
-    val flushDirect: () => Long = () => {
-      val bad = Decode.deadLetter(
-        Decode.decode(events, registry, defaultKey, Cdc.MessageType, framing)).count()
-      if (bad > 0L) writeLetters()
+      val observed =
+        if (merged) obs.get.get("bad").collect { case l: Long => l } else None
+      val bad = observed.getOrElse(Decode.deadLetter(decodeAll()).count())
+      if (bad > 0L) deadLetterDir.foreach(writeLetters)
       bad
     }
 
@@ -130,7 +110,7 @@ object Replay {
       } ++ Seq(col("seq"), col("op")) ++
       (if (fieldIds.contains(Merge.PatchMaskCol) && avail(Merge.PatchMaskCol))
         Seq(col(Merge.PatchMaskCol)) else Nil)
-    DecodedBatch(ok.select(cols: _*), flushDeadLetters, flushDirect, acc)
+    DecodedBatch(ok.select(cols: _*), flushDeadLetters, acc)
   }
 
   final case class ReplayResult(epochs: Int, stats: Seq[Merge.MergeStats])
@@ -175,8 +155,6 @@ object Replay {
         * inside the epoch's plan, so whatever it joins/derives fuses with
         * the decode scan instead of materializing a resolved copy. */
       eventTransform: Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = None): ReplayResult = {
-    import spark.implicits._
-
     if (!IceLite.exists(tableDir)) createTable(tableDir, buckets)
 
     // ONE relation (file listing + schema) reused across epochs — a fresh
@@ -194,37 +172,18 @@ object Replay {
     }
     val registry = spark.sparkContext.broadcast(reg)
 
-    // epoch list from the partition directories — no Spark job
-    val epochs = java.nio.file.Files.list(java.nio.file.Paths.get(logDir))
-      .iterator().asScala.map(_.getFileName.toString)
-      .collect { case s if s.startsWith("epoch=") => s.stripPrefix("epoch=").toLong }
-      .toVector.sorted
-
-    val results = epochs.map { e =>
+    val applied = Epoch.list(logDir).map { e =>
       val raw = log.filter(col("epoch") === e) // partition-dir prune
-      val ev = eventTransform.map(_(raw)).getOrElse(raw)
-        .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-        .as[ChangeEvent]
-      val batch = decodeForMerge(ev, registry, Some(s"$tableDir/_deadletter"), framing)
-      val keys = if (pruneBuckets)
-        Some(Decode.decodeKeys(ev, registry, SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType,
-          Seq("repo", "path"), framing))
-      else None
       // namespaced fence id: replay partition numbers can never collide with
       // a streaming tail's batchIds on the same table
-      val st = Merge.mergeEpoch(spark, tableDir, batch.updates, "seq", "op", s"$namespace-$e", keys,
-        deltaThreshold = deltaThreshold)
-      // fenced replay: the prior attempt may have crashed between its
-      // commit and its flush — recover the letters (idempotent write)
-      if (st.applied) batch.flushDeadLetters() else batch.flushDeadLettersDirect()
-      (st, batch.routeStats)
+      val id = s"$namespace-$e"
+      id -> Epoch(Epoch.events(eventTransform.fold(raw)(_(raw))), registry, tableDir, id,
+        framing, pruneBuckets, deltaThreshold)
     }
     // one ledger write per replay; fenced (already-committed) epochs did no
-    // work and their accumulators are empty — don't write misleading rows
-    Lineage.appendAll(spark, tableDir, results.collect {
-      case (st, acc) if st.applied => Lineage.entry(st, acc)
-    })
-    ReplayResult(epochs.length, results.map(_._1).toSeq)
+    // work and write no (misleading) rows
+    Lineage.appendAll(spark, tableDir, applied.flatMap(_._2))
+    ReplayResult(applied.length, applied.map((Epoch.stats _).tupled))
   }
 
   /** SELECTIVE REPLAY — rebuild one key slice (a tenant, a hot repo) from
@@ -250,40 +209,26 @@ object Replay {
       buckets: Int = 32,
       namespace: String = "selective",
       framing: Framing.Value = Framing.Raw): ReplayResult = {
-    import spark.implicits._
     if (!IceLite.exists(tableDir)) createTable(tableDir, buckets)
     val log = spark.read.parquet(logDir)
     val registry = spark.sparkContext.broadcast(Cdc.registry)
-    val epochs = java.nio.file.Files.list(java.nio.file.Paths.get(logDir))
-      .iterator().asScala.map(_.getFileName.toString)
-      .collect { case s if s.startsWith("epoch=") => s.stripPrefix("epoch=").toLong }
-      .toVector.sorted
-    val results = epochs.map { e =>
+    val applied = Epoch.list(logDir).map { e =>
       val raw = log.filter(col("epoch") === e)
-      val ev = raw
-        .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-        .as[ChangeEvent]
-      val ids = Decode.decodeKeysWithId(ev, registry,
-          SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType, keyFields, framing)
+      val ids = Decode.decodeKeysWithId(Epoch.events(raw), registry,
+          Epoch.DefaultKey, Cdc.MessageType, keyFields, framing)
         .filter(expr(predicateSql))
         .select("partition", "offset").distinct()
-      val evSel = raw.join(broadcast(ids), Seq("partition", "offset"))
-        .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-        .as[ChangeEvent]
-      val batch = decodeForMerge(evSel, registry, None, framing)
       // re-apply the predicate post-decode: under VarintDelimited framing a
       // (partition, offset) names a whole SEGMENT of inner messages, so the
       // id join admits every message sharing a segment with a match — the
       // slice table must hold ONLY predicate rows, not their neighbors
-      val sliced = batch.updates.filter(expr(predicateSql))
-      val st = Merge.mergeEpoch(spark, tableDir, sliced, "seq", "op",
-        s"$namespace-$e")
-      (st, batch.routeStats)
+      val id = s"$namespace-$e"
+      id -> Epoch(Epoch.events(raw.join(broadcast(ids), Seq("partition", "offset"))),
+        registry, tableDir, id, framing, deadLetters = false,
+        transformUpdates = Some(_.filter(expr(predicateSql))))
     }
-    Lineage.appendAll(spark, tableDir, results.collect {
-      case (st, acc) if st.applied => Lineage.entry(st, acc)
-    })
-    ReplayResult(epochs.length, results.map(_._1).toSeq)
+    Lineage.appendAll(spark, tableDir, applied.flatMap(_._2))
+    ReplayResult(applied.length, applied.map((Epoch.stats _).tupled))
   }
 
   /** MULTI-WRITER INGEST — replay several change logs into ONE table
@@ -297,10 +242,10 @@ object Replay {
     * protocol; the aborted attempt's staged files become vacuum-swept
     * orphans). The final state is interleaving-independent: merges are
     * seq-LWW order-independent across epochs (the q92 out-of-order
-    * contract), fences are per-namespace, and dead-letter flushes plus
-    * the single ledger append are serialized. Namespaces MUST be
-    * distinct per log or the writers would fence each other's epoch
-    * numbers. Returns per-log results plus the total conflict-retry
+    * contract), fences are per-namespace, and dead-letter and ledger
+    * appends are serialized per table ([[Epoch.appendLocked]]). Namespaces
+    * MUST be distinct per log or the writers would fence each other's
+    * epoch numbers. Returns per-log results plus the total conflict-retry
     * count (usually 0 — the bound exists so a pathological livelock
     * fails loudly instead of spinning). */
   def replayLogsConcurrent(
@@ -311,16 +256,11 @@ object Replay {
       framing: Framing.Value = Framing.Raw,
       deltaThreshold: Int = 8,
       maxRetriesPerEpoch: Int = 20): (Seq[ReplayResult], Int) = {
-    import spark.implicits._
     require(logs.map(_._2).distinct.size == logs.size,
       s"fence namespaces must be distinct, got ${logs.map(_._2)}")
     if (!IceLite.exists(tableDir)) createTable(tableDir, buckets)
     val registry = spark.sparkContext.broadcast(Cdc.registry)
     val retries = new java.util.concurrent.atomic.AtomicInteger(0)
-    // single-writer sections: concurrent append jobs to ONE parquet dir
-    // share the committer's _temporary/0 staging dir — the first commit's
-    // cleanup would delete the second job's pending task outputs
-    val flushLock = new Object
     val pool = java.util.concurrent.Executors.newFixedThreadPool(logs.size)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -328,47 +268,34 @@ object Replay {
       val futures = logs.map { case (logDir, ns) =>
         scala.concurrent.Future {
           val log = spark.read.parquet(logDir)
-          val epochs = java.nio.file.Files.list(java.nio.file.Paths.get(logDir))
-            .iterator().asScala.map(_.getFileName.toString)
-            .collect { case p if p.startsWith("epoch=") => p.stripPrefix("epoch=").toLong }
-            .toVector.sorted
-          val perEpoch = epochs.map { e =>
-            val ev = log.filter(col("epoch") === e)
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[ChangeEvent]
-            val batch = decodeForMerge(ev, registry, Some(s"$tableDir/_deadletter"), framing)
-            val keys = Some(Decode.decodeKeys(ev, registry, SchemaKey(Cdc.SchemaId, -1),
-              Cdc.MessageType, Seq("repo", "path"), framing))
+          val applied = Epoch.list(logDir).map { e =>
+            val ev = Epoch.events(log.filter(col("epoch") === e))
+            val id = s"$ns-$e"
+            // a conflict aborts the whole epoch: re-run it from the decode,
+            // so the retry carries fresh lineage counters, not the sum of
+            // both attempts
             var attempt = 0
-            var done: Option[Merge.MergeStats] = None
+            var done: Option[Option[Lineage.Entry]] = None
             while (done.isEmpty) {
-              try {
-                val st = Merge.mergeEpoch(spark, tableDir, batch.updates, "seq", "op",
-                  s"$ns-$e", keys, deltaThreshold = deltaThreshold)
-                flushLock.synchronized {
-                  if (st.applied) batch.flushDeadLetters()
-                  else batch.flushDeadLettersDirect() // crash-recovery, idempotent
-                }
-                done = Some(st)
-              } catch {
+              try done = Some(Epoch(ev, registry, tableDir, id, framing,
+                deltaThreshold = deltaThreshold))
+              catch {
                 case cme: java.util.ConcurrentModificationException =>
                   attempt += 1
                   retries.incrementAndGet()
                   if (attempt > maxRetriesPerEpoch)
                     throw new IllegalStateException(
-                      s"epoch $ns-$e: conflict retry limit ($maxRetriesPerEpoch) exceeded", cme)
+                      s"epoch $id: conflict retry limit ($maxRetriesPerEpoch) exceeded", cme)
               }
             }
-            (done.get, batch.routeStats)
+            id -> done.get
           }
-          (ReplayResult(epochs.length, perEpoch.map(_._1)), perEpoch)
+          (ReplayResult(applied.length, applied.map((Epoch.stats _).tupled)), applied.flatMap(_._2))
         }
       }
       val settled = futures.map(f =>
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-      Lineage.appendAll(spark, tableDir, settled.flatMap(_._2).collect {
-        case (st, acc) if st.applied => Lineage.entry(st, acc)
-      })
+      Lineage.appendAll(spark, tableDir, settled.flatMap(_._2))
       (settled.map(_._1), retries.get())
     } finally pool.shutdown()
   }
@@ -398,7 +325,7 @@ object Replay {
         * source consumed an evolved v3+ log, or a rename was applied).
         * Without it, replication would throw on every evolved column. */
       sourceFieldIds: Map[String, Int] = Map.empty): Seq[org.apache.spark.sql.Column] = {
-    val latest = Cdc.registry.resolveKey(SchemaKey(Cdc.SchemaId, -1))
+    val latest = Cdc.registry.resolveKey(Epoch.DefaultKey)
     val fromRegistry = Cdc.registry.descriptor(latest, Cdc.MessageType).get._2
       .fields.map(f => f.name -> f.number).toMap
     // the source table's ids win: they ARE the field numbers the decode
@@ -571,7 +498,6 @@ object Replay {
       registry: Broadcast[DescriptorRegistry],
       epochTag: String,
       framing: Framing.Value = Framing.Raw): RetryStats = {
-    import spark.implicits._
     val dld = s"$tableDir/_deadletter"
     val dldPath = java.nio.file.Paths.get(dld)
     if (!java.nio.file.Files.isDirectory(dldPath))
@@ -584,24 +510,19 @@ object Replay {
     val expKept = all.filter(col("route") === Expectations.Route)
     val attempted = dl.count()
     if (attempted == 0) return RetryStats(0, applied = false, 0, 0)
-    val ev = dl
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[ChangeEvent]
-    val batch = decodeForMerge(ev, registry, None, framing)
-    // keys-only pre-pass with the FIXED registry: still-failing payloads
-    // yield no key row (and no update row), decodable ones size/prune the
-    // merge like every other path
-    val keys = Some(Decode.decodeKeys(ev, registry, SchemaKey(Cdc.SchemaId, -1),
-      Cdc.MessageType, Seq("repo", "path"), framing))
-    val st = Merge.mergeEpoch(spark, tableDir, batch.updates, "seq", "op", epochTag, keys)
+    val ev = Epoch.events(dl)
+    // the keys pre-pass runs with the FIXED registry: still-failing
+    // payloads yield no key row (and no update row)
+    val applied = Epoch(ev, registry, tableDir, epochTag, framing, deadLetters = false)
+    Lineage.appendAll(spark, tableDir, applied.toSeq)
     // FENCED retry (a reused epochTag) must leave the store UNTOUCHED: the
     // merge applied nothing, so rewriting the store would destroy every
     // now-decodable row unmerged — the one unrecoverable outcome. The
     // caller gets applied=false and retries under a fresh tag.
-    if (!st.applied) return RetryStats(attempted, applied = false, 0, attempted)
+    if (applied.isEmpty) return RetryStats(attempted, applied = false, 0, attempted)
     // still-failing rows keep their (kept-original) payload + schema refs
     val still = Decode.deadLetter(
-        Decode.decode(ev, registry, SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType, framing))
+        Decode.decode(ev, registry, Epoch.DefaultKey, Cdc.MessageType, framing))
       .join(dl.select("partition", "offset", "schemaId", "schemaVersion", "messageType"),
         Seq("partition", "offset"))
       .localCheckpoint()
@@ -620,7 +541,7 @@ object Replay {
       java.nio.file.Files.move(dldPath, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
     org.apache.commons.io.FileUtils.deleteQuietly(old.toFile)
-    RetryStats(attempted, st.applied, st.batchRows, remaining)
+    RetryStats(attempted, applied = true, applied.get.batchRows, remaining)
   }
 
   /** The oracle fold (FIXTURES.md §C): expected final state computed directly
@@ -628,12 +549,9 @@ object Replay {
     * DELETE removes the key. */
   def oracleFold(spark: SparkSession, logDir: String,
       framing: Framing.Value = Framing.Raw): DataFrame = {
-    import spark.implicits._
     val registry = spark.sparkContext.broadcast(Cdc.registry)
-    val ev = spark.read.parquet(logDir)
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[ChangeEvent]
-    val upd = decodeForMerge(ev, registry, None, framing).updates
+    val upd = decodeForMerge(Epoch.events(spark.read.parquet(logDir)), registry, None,
+      framing).updates
     val cols = upd.columns
     upd.groupBy(col("repo"), col("path"))
       .agg(max_by(struct(cols.toIndexedSeq.map(col): _*), col("seq")).as("__r"))

@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.decode.ChangeEvent
-import graft.lake.{IceLite, Merge}
+import graft.lake.IceLite
 
 /** Structured-Streaming change-log tail → IceLite upsert
   * (north_star: "change-event tail ... foreachBatch ... MERGE INTO").
@@ -77,7 +77,6 @@ object Tail {
       transformUpdates: Option[(SparkSession, org.apache.spark.sql.DataFrame) =>
         org.apache.spark.sql.DataFrame] = None): StreamingQuery = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
 
     if (!IceLite.exists(tableDir)) Replay.createTable(tableDir, buckets)
     var reg = Cdc.registry
@@ -107,46 +106,16 @@ object Tail {
             superseded.unpersist(blocking = false) // don't leak the old registry
           }
         }
-        // ingest expectations: split the batch into conforming events and
-        // rule violations BEFORE the merge (the q184 batch-path contract)
-        val defaultKey = graft.registry.SchemaKey(Cdc.SchemaId, -1)
-        val (ev, viol) =
-          if (rules.isEmpty) (batch, None)
-          else {
-            val v = Expectations.violationsOf(
-              graft.decode.Decode.success(graft.decode.Decode.decode(
-                batch, registry, defaultKey, Cdc.MessageType)), rules)
-              .localCheckpoint()
-            val conform = batch.toDF()
-              .join(v.select("partition", "offset"), Seq("partition", "offset"), "left_anti")
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[ChangeEvent]
-            (conform, Some(v))
-          }
-        val dec = Replay.decodeForMerge(ev, registry, Some(s"$tableDir/_deadletter"))
-        val keys = Some(graft.decode.Decode.decodeKeys(ev, registry,
-          defaultKey, Cdc.MessageType, Seq("repo", "path")))
-        val up = transformUpdates
-          .map(_(batch.sparkSession, dec.updates)).getOrElse(dec.updates)
-        val st = Merge.mergeEpoch(batch.sparkSession, tableDir, up, "seq", "op",
-          s"$src-$batchId", keys, deltaThreshold = deltaThreshold)
-        // a fenced (replayed) batch did no work: its epoch's real entry is
-        // already in the ledger and the accumulator holds zero-or-partial
-        // counts — appending would write a misleading row
-        if (st.applied) {
-          dec.flushDeadLetters()
-          viol.foreach(v =>
-            Expectations.writeDeadLetters(v, batch.toDF(), tableDir))
-          Lineage.append(batch.sparkSession, tableDir, Lineage.entry(st, dec.routeStats))
-          onBatchCommitted.foreach(_(batch.sparkSession, batchId))
-        } else {
-          // replayed batch (crash between commit and flush): recover any
-          // unflushed dead letters — both writes dedup by event identity
-          dec.flushDeadLettersDirect()
-          viol.foreach(v =>
-            Expectations.writeDeadLetters(v, batch.toDF(), tableDir))
-        }
-        ()
+        // ingest expectations: rule violations leave the batch BEFORE the
+        // merge (the q184 batch-path contract); a replayed batch fences, and
+        // its dead-letter recovery flushes dedup by event identity
+        val applied = Epoch(batch, registry, tableDir, s"$src-$batchId",
+          deltaThreshold = deltaThreshold,
+          violations =
+            if (rules.isEmpty) None else Some(Expectations.violations(batch, registry, rules)),
+          transformUpdates = transformUpdates.map(f => f(batch.sparkSession, _)))
+        Lineage.appendAll(batch.sparkSession, tableDir, applied.toSeq)
+        if (applied.isDefined) onBatchCommitted.foreach(_(batch.sparkSession, batchId))
       }
       .start()
   }

@@ -91,7 +91,6 @@ object Txn {
   def applyEpoch(spark: SparkSession, logDir: String, txnDir: String,
       tables: Seq[String], epoch: Long, buckets: Int = 8,
       crashPoint: String => Unit = _ => ()): TxnStats = {
-    import spark.implicits._
     require(tables.nonEmpty, "need at least one participant table")
     if (committedEpochs(txnDir).contains(epoch))
       return TxnStats(epoch, Nil) // fully fenced
@@ -110,21 +109,15 @@ object Txn {
     val registry = spark.sparkContext.broadcast(Cdc.registry)
     val n = routed.length
     val stats = routed.zipWithIndex.map { case (dir, i) =>
-      val ev = log
-        .filter(col("epoch") === epoch && pmod(col("partition"), lit(n)) === i)
-        .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-        .as[graft.decode.ChangeEvent]
-      // dead letters go to the slice's own table store, like every other
-      // replay path; on a fenced redo the direct flush recovers letters a
-      // crashed prior attempt may not have written (idempotent by identity)
-      val batch = Replay.decodeForMerge(ev, registry, Some(s"$dir/_deadletter"))
-      val keys = Some(graft.decode.Decode.decodeKeys(ev, registry,
-        graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType,
-        Seq("repo", "path")))
-      val st = Merge.mergeEpoch(spark, dir, batch.updates, "seq", "op", s"txn-$epoch", keys)
-      if (st.applied) batch.flushDeadLetters() else batch.flushDeadLettersDirect()
+      val ev = Epoch.events(
+        log.filter(col("epoch") === epoch && pmod(col("partition"), lit(n)) === i))
+      // dead letters and the ledger row go to the slice's own table, like
+      // every other replay path; the row lands with the commit, before the
+      // crash seam, so a redo (fenced) never writes a second one
+      val applied = Epoch(ev, registry, dir, s"txn-$epoch")
+      Lineage.appendAll(spark, dir, applied.toSeq)
       crashPoint(s"committed-$epoch-$i")
-      st
+      Epoch.stats(s"txn-$epoch", applied)
     }
     // the done marker pins each participant's snapshot VERSION at commit
     // time — [[consistentRead]]'s cross-table cut. Staged + renamed so a
@@ -171,12 +164,8 @@ object Txn {
   def applyLog(spark: SparkSession, logDir: String, txnDir: String,
       tables: Seq[String], buckets: Int = 8,
       crashPoint: String => Unit = _ => ()): Seq[TxnStats] = {
-    import scala.jdk.CollectionConverters._
     val pending = pendingEpochs(txnDir)
-    val epochs = Files.list(Paths.get(logDir)).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("epoch=") => s.stripPrefix("epoch=").toLong }
-      .toVector.sorted
+    val epochs = Epoch.list(logDir)
     (pending ++ epochs.filterNot(pending.contains)).distinct.sorted.map { e =>
       applyEpoch(spark, logDir, txnDir, tables, e, buckets, crashPoint)
     }

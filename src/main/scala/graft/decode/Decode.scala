@@ -80,14 +80,6 @@ object Decode {
     StructField("offset", LongType, nullable = false),
     StructField("payload", BinaryType, nullable = true)))
 
-  /** Output schema: meta columns + `msg` struct derived from the descriptor
-    * of (defaultSchema, messageType) in the registry. */
-  def outputSchema(registry: DescriptorRegistry, defaultKey: SchemaKey, messageType: String): StructType = {
-    val (fs, desc) = registry.descriptor(defaultKey, messageType).getOrElse(
-      throw new Descriptors.UnknownMessageTypeException(messageType))
-    StructType(metaSchema.fields :+ StructField("msg", SparkSchema.structFor(fs, desc), nullable = true))
-  }
-
   /** Generic decode. Error rows keep the ORIGINAL payload (dead-letter
     * contract, ProtobufDecoder.java:99-100); success rows drop it (saves the
     * shuffle width downstream).
@@ -105,12 +97,30 @@ object Decode {
       framing: Framing.Value = Framing.Raw,
       /** when set, every emitted row also bumps (source partition, route) —
         * per-partition lineage metrics riding the same pass. */
-      stats: Option[RouteStatsAccumulator] = None): DataFrame = {
+      stats: Option[RouteStatsAccumulator] = None): DataFrame =
+    decodeAs(events, registry, defaultKey, messageType, framing, stats, readerFields = None)
 
-    val schema = outputSchema(registry.value, defaultKey, messageType)
+  /** [[decode]] into a reader descriptor cut down to `readerFields` when
+    * set: every other field is wire-SKIPPED (a length-delimited skip is an
+    * O(1) jump — the payload body is never materialized), while schema
+    * resolution, routing and framing stay exactly [[decode]]'s. */
+  private def decodeAs(
+      events: Dataset[ChangeEvent],
+      registry: Broadcast[DescriptorRegistry],
+      defaultKey: SchemaKey,
+      messageType: String,
+      framing: Framing.Value,
+      stats: Option[RouteStatsAccumulator],
+      readerFields: Option[Seq[String]]): DataFrame = {
+
+    def reader(desc: Descriptors.MessageDesc): Descriptors.MessageDesc =
+      readerFields.fold(desc)(ks => desc.copy(fields = desc.fields.filter(f => ks.contains(f.name))))
+    val (fs0, desc0) = registry.value.descriptor(defaultKey, messageType).getOrElse(
+      throw new Descriptors.UnknownMessageTypeException(messageType))
+    val schema = StructType(metaSchema.fields :+
+      StructField("msg", SparkSchema.structFor(fs0, reader(desc0)), nullable = true))
     val msgOrdinal = schema.fieldIndex("msg")
     val spark = events.sparkSession
-
     val in = events.toDF().select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
     val rdd = org.apache.spark.sql.graft.InternalDf.toRdd(in).mapPartitions { iter =>
       import org.apache.spark.sql.catalyst.InternalRow
@@ -120,7 +130,8 @@ object Decode {
       val reg = registry.value // one broadcast deref per partition
       // reader-side (output) descriptor: rows are projected into THIS shape
       // by field number, whatever descriptor version wrote the event
-      val (fsOut, descOut) = reg.descriptor(defaultKey, messageType).get
+      val (fsOut, descFull) = reg.descriptor(defaultKey, messageType).get
+      val descOut = reader(descFull)
       // row-compiled decoders, one per writer schema version seen (memoized)
       val decoders = new java.util.HashMap[(SchemaKey, String), CatalystRowDecoder]()
       def decoderFor(key: SchemaKey, mt: String, writerDesc: graft.proto.Descriptors.MessageDesc): CatalystRowDecoder = {
@@ -128,7 +139,7 @@ object Decode {
         var dec = decoders.get(k)
         if (dec == null) {
           dec =
-            if (writerDesc eq descOut) new CatalystRowDecoder(fsOut, descOut)
+            if (writerDesc eq descFull) new CatalystRowDecoder(fsOut, descOut)
             else new CatalystRowDecoder(fsOut, descOut, Some(writerDesc.fields.map(_.number).toSet))
           decoders.put(k, dec)
         }
@@ -205,52 +216,21 @@ object Decode {
     org.apache.spark.sql.graft.InternalDf.create(spark, rdd, schema)
   }
 
-  /** Keys-only decode: a reduced descriptor keeps just `keyFields`, so every
-    * other field is wire-SKIPPED (length-delimited skip is an O(1) jump —
-    * the payload body is never materialized). Used for touched-bucket
-    * discovery before a MERGE; errors yield no row. */
+  /** Keys-only decode: [[decode]]'s success rows under a reader
+    * descriptor cut down to `keyFields` — each event resolves against its
+    * own (schemaId, schemaVersion) exactly as the update rows do, and every
+    * non-key field is wire-skipped. Used for touched-bucket discovery
+    * before a MERGE; non-success routes yield no row, so the key rows are
+    * exactly the success rows' keys. */
   def decodeKeys(
       events: Dataset[ChangeEvent],
       registry: Broadcast[DescriptorRegistry],
       defaultKey: SchemaKey,
       messageType: String,
       keyFields: Seq[String],
-      framing: Framing.Value = Framing.Raw): DataFrame = {
-
-    val (fsOut, descOut) = registry.value.descriptor(defaultKey, messageType).getOrElse(
-      throw new Descriptors.UnknownMessageTypeException(messageType))
-    val reduced = descOut.copy(fields = descOut.fields.filter(f => keyFields.contains(f.name)))
-    val schema = SparkSchema.structFor(fsOut, reduced)
-
-    val spark = events.sparkSession
-    val in = events.toDF().select("payload")
-    val rdd = org.apache.spark.sql.graft.InternalDf.toRdd(in).mapPartitions { iter =>
-      import org.apache.spark.sql.catalyst.InternalRow
-      val reg = registry.value
-      val fs = reg.fileSet(defaultKey).get
-      val dec = new CatalystRowDecoder(fs, reduced)
-      iter.flatMap { ir =>
-        val payload = if (ir.isNullAt(0)) null else ir.getBinary(0)
-        try {
-          framing match {
-            case Framing.Raw => Iterator.single(dec.decode(payload): InternalRow)
-            case Framing.VarintDelimited =>
-              val r = new graft.proto.Wire.Reader(payload)
-              val out = Vector.newBuilder[InternalRow]
-              var ok = true
-              while (r.hasRemaining && ok) {
-                try {
-                  val (p, len) = r.readSlice()
-                  out += dec.decode(new graft.proto.Wire.Reader(r.buf, p, p + len))
-                } catch { case _: Exception => ok = false }
-              }
-              out.result().iterator
-          }
-        } catch { case _: Exception => Iterator.empty }
-      }
-    }
-    org.apache.spark.sql.graft.InternalDf.create(spark, rdd, schema)
-  }
+      framing: Framing.Value = Framing.Raw): DataFrame =
+    decodeKeysWithId(events, registry, defaultKey, messageType, keyFields, framing)
+      .drop("partition", "offset")
 
   /** [[decodeKeys]] with the EVENT IDENTITY carried: one row per decoded
     * message as (partition, offset, keyFields…). This is the row-level
@@ -258,66 +238,16 @@ object Decode {
     * payload is worth decoding (selective replay, tenant rebuilds) while
     * every non-key field is wire-skipped. Delimited segments emit one row
     * per inner message, all sharing the segment's (partition, offset) — a
-    * matching segment is later decoded whole. Errors yield no row. */
+    * matching segment is later decoded whole. Non-success routes yield no
+    * row. */
   def decodeKeysWithId(
       events: Dataset[ChangeEvent],
       registry: Broadcast[DescriptorRegistry],
       defaultKey: SchemaKey,
       messageType: String,
       keyFields: Seq[String],
-      framing: Framing.Value = Framing.Raw): DataFrame = {
-
-    import org.apache.spark.sql.types._
-    val (fsOut, descOut) = registry.value.descriptor(defaultKey, messageType).getOrElse(
-      throw new Descriptors.UnknownMessageTypeException(messageType))
-    val reduced = descOut.copy(fields = descOut.fields.filter(f => keyFields.contains(f.name)))
-    val keySchema = SparkSchema.structFor(fsOut, reduced)
-    val outSchema = StructType(
-      StructField("partition", IntegerType, nullable = false) +:
-        StructField("offset", LongType, nullable = false) +: keySchema.fields)
-    val keyTypes = keySchema.fields.map(_.dataType)
-
-    val spark = events.sparkSession
-    val in = events.toDF().select("payload", "partition", "offset")
-    val rdd = org.apache.spark.sql.graft.InternalDf.toRdd(in).mapPartitions { iter =>
-      import org.apache.spark.sql.catalyst.InternalRow
-      import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-      val reg = registry.value
-      val fs = reg.fileSet(defaultKey).get
-      val dec = new CatalystRowDecoder(fs, reduced)
-      def withId(p: Int, o: Long, kr: InternalRow): InternalRow = {
-        val arr = new Array[Any](2 + keyTypes.length)
-        arr(0) = p; arr(1) = o
-        var i = 0
-        while (i < keyTypes.length) { arr(i + 2) = kr.get(i, keyTypes(i)); i += 1 }
-        new GenericInternalRow(arr)
-      }
-      iter.flatMap { ir =>
-        val payload = if (ir.isNullAt(0)) null else ir.getBinary(0)
-        val p = ir.getInt(1)
-        val o = ir.getLong(2)
-        try {
-          framing match {
-            case Framing.Raw =>
-              Iterator.single(withId(p, o, dec.decode(payload)))
-            case Framing.VarintDelimited =>
-              val r = new graft.proto.Wire.Reader(payload)
-              val out = Vector.newBuilder[InternalRow]
-              var ok = true
-              while (r.hasRemaining && ok) {
-                try {
-                  val (pos, len) = r.readSlice()
-                  out += withId(p, o,
-                    dec.decode(new graft.proto.Wire.Reader(r.buf, pos, pos + len)))
-                } catch { case _: Exception => ok = false }
-              }
-              out.result().iterator
-          }
-        } catch { case _: Exception => Iterator.empty }
-      }
-    }
-    org.apache.spark.sql.graft.InternalDf.create(spark, rdd, outSchema)
-  }
+      framing: Framing.Value = Framing.Raw): DataFrame =
+    success(decodeAs(events, registry, defaultKey, messageType, framing, None, Some(keyFields)))
 
   /** Route splits (filter on the computed column → 3 sinks). */
   def success(decoded: DataFrame): DataFrame =

@@ -108,7 +108,6 @@ object Scrub {
   def repairBucket(spark: SparkSession, dir: String, logDir: String, bucket: Int,
       epochId: String, namespace: String = "replay",
       framing: graft.decode.Framing.Value = graft.decode.Framing.Raw): Unit = {
-    import spark.implicits._
     val base = IceLite.load(dir)
     if (base.hasEpoch(epochId)) return
     require(bucket >= 0 && bucket < base.buckets, s"no such bucket $bucket")
@@ -116,17 +115,11 @@ object Scrub {
     val log = spark.read.parquet(logDir)
     // only the epochs this table actually committed — a log that ran ahead
     // of the table must not leak future events into the repaired bucket
-    import scala.jdk.CollectionConverters._
-    val committed = java.nio.file.Files.list(Paths.get(logDir)).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("epoch=") => s.stripPrefix("epoch=").toLong }
-      .filter(e => base.hasEpoch(s"$namespace-$e")).toSeq
+    val committed = graft.cdc.Epoch.list(logDir).filter(e => base.hasEpoch(s"$namespace-$e"))
     require(committed.nonEmpty, s"no committed '$namespace' epochs found in $logDir")
 
     val registry = spark.sparkContext.broadcast(graft.cdc.Cdc.registry)
-    val ev = log.filter(col("epoch").isin(committed: _*))
-      .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-      .as[graft.decode.ChangeEvent]
+    val ev = graft.cdc.Epoch.events(log.filter(col("epoch").isin(committed: _*)))
     val upd = graft.cdc.Replay.decodeForMerge(ev, registry, None, framing).updates
       .filter(bucketExpr(base.keyCols, base.buckets) === bucket)
     // resolved bucket state incl. tombstones — the uncompacted fold

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cdc.{Cdc, Lineage, LogGen, Replay}
+import graft.cdc.{Cdc, Epoch, Lineage, LogGen, Replay}
 import graft.lake.{Compaction, Diff, Dml, IceLite}
 
 /** The engine's own CDC operators surfaced through the driver gate.
@@ -59,8 +59,7 @@ object CdcQueries {
       import spark.implicits._
       val registry = spark.sparkContext.broadcast(Cdc.registry)
       val ev = spark.read.parquet(logDir)
-        .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-        .as[graft.decode.ChangeEvent]
+        .transform(Epoch.events)
       val upd = Replay.decodeForMerge(ev, registry, None).updates
       upd.write.mode("overwrite").parquet(s"$root/decoded")
     }
@@ -110,8 +109,7 @@ object CdcQueries {
     val log = spark.read.parquet(logDir)
     (0 until epochs).map { e =>
       val ev = log.filter(col("epoch") === e)
-        .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-        .as[graft.decode.ChangeEvent]
+        .transform(Epoch.events)
       Replay.decodeForMerge(ev, registry, None).updates.withColumn("epoch", lit(e))
     }.reduce(_.unionByName(_)).write.mode("overwrite").parquet(s"$root/decoded")
   }
@@ -170,8 +168,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -215,8 +212,7 @@ object CdcQueries {
           pathsPerRepo = 30, v1Fraction = 0.7), logDir, epochs = 1)
         val registry = s.sparkContext.broadcast(Cdc.registry)
         val ev = s.read.parquet(logDir)
-          .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-          .as[graft.decode.ChangeEvent]
+          .transform(Epoch.events)
         Replay.decodeForMerge(ev, registry, None).updates
           .write.mode("overwrite").parquet(s"$root/decoded")
         val back = s.read.parquet(s"$root/decoded")
@@ -257,8 +253,7 @@ object CdcQueries {
         // oracle input: the CLEAN decode, offsets included
         val registry = s.sparkContext.broadcast(Cdc.registry)
         val ev = log
-          .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-          .as[graft.decode.ChangeEvent]
+          .transform(Epoch.events)
         graft.decode.Decode.success(graft.decode.Decode.decode(
           ev, registry, graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType))
           .write.mode("overwrite").parquet(s"$root/decoded")
@@ -317,8 +312,7 @@ object CdcQueries {
         val registry = s.sparkContext.broadcast(Cdc.registry)
         (0 until 2).map { e =>
           val ev = log.filter(col("epoch") === e)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates.withColumn("epoch", lit(e))
         }.reduce(_.unionByName(_)).write.mode("overwrite").parquet(s"$root/decoded")
         Replay.replayLog(s, logDir, tableDir, buckets = 8)
@@ -364,8 +358,7 @@ object CdcQueries {
         // oracle input: the decoded change rows of the FULL log
         val registry = s.sparkContext.broadcast(Cdc.registry)
         Replay.decodeForMerge(
-          ev.select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent], registry, None)
+          Epoch.events(ev), registry, None)
           .updates.write.mode("overwrite").parquet(s"$root/decoded")
         // wave 1, then wave 2 resuming from the same checkpoint
         ev.filter(col("offset") < 1500).repartition(3)
@@ -406,8 +399,7 @@ object CdcQueries {
         val ev = LogGen.events(s, p)
         val registry = s.sparkContext.broadcast(Cdc.registry)
         Replay.decodeForMerge(
-          ev.select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent], registry, None)
+          Epoch.events(ev), registry, None)
           .updates.write.mode("overwrite").parquet(s"$root/decoded")
         import graft.lake.MatView
         ev.filter(col("offset") < 1500).repartition(3)
@@ -884,8 +876,7 @@ object CdcQueries {
           val log = s.read.parquet(logDir)
           val dec = (0 until 3).map { e =>
             val ev = log.filter(col("epoch") === e)
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent]
+              .transform(Epoch.events)
             Replay.decodeForMerge(ev, registry, None).updates.withColumn("epoch", lit(e))
           }.reduce(_.unionByName(_))
           dec.write.mode("overwrite").parquet(s"$root/decoded")
@@ -950,9 +941,7 @@ object CdcQueries {
           Seq(col("offset") < 1500, col("offset") >= 1500).zipWithIndex.map {
             case (cond, w) =>
               Replay.decodeForMerge(
-                ev.filter(cond)
-                  .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-                  .as[graft.decode.ChangeEvent], registry, None)
+                Epoch.events(ev.filter(cond)), registry, None)
                 .updates.withColumn("wave", lit(w))
           }.reduce(_.unionByName(_)).write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -1020,8 +1009,7 @@ object CdcQueries {
         val registry = s.sparkContext.broadcast(Cdc.registry)
         clock("decode_dump") {
           val ev = log
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           graft.decode.Decode.success(graft.decode.Decode.decode(
             ev, registry, graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType))
             .write.mode("overwrite").parquet(s"$root/decoded")
@@ -1153,8 +1141,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -1371,8 +1358,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -1472,8 +1458,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -1486,10 +1471,10 @@ object CdcQueries {
         // merge sizing would write ONE file per bucket per epoch here, and
         // the many-small-delta-files regime is exactly what this bloom
         // gate exists to measure.
-        s.conf.set("spark.graft.merge.targetRowsPerTask", "64")
-        try clock("replay") { Replay.replayLog(s, logDir, tableDir, buckets = 8,
-          deltaThreshold = 1000) }
-        finally s.conf.unset("spark.graft.merge.targetRowsPerTask")
+        graft.Conf.withConf(s, "spark.graft.merge.targetRowsPerTask" -> "64") {
+          clock("replay") { Replay.replayLog(s, logDir, tableDir, buckets = 8,
+            deltaThreshold = 1000) }
+        }
         val snap = IceLite.load(tableDir)
         val deltas = snap.files.filter(_.delta)
         require(deltas.length >= 5 * 8,
@@ -1680,8 +1665,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -1754,8 +1738,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -1830,8 +1813,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -1903,8 +1885,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -1962,8 +1943,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -2039,8 +2019,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -2102,8 +2081,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           graft.decode.Decode.success(graft.decode.Decode.decode(ev, registry,
               graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType))
             .write.mode("overwrite").parquet(s"$root/decoded")
@@ -2171,8 +2149,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = log
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           graft.decode.Decode.success(graft.decode.Decode.decode(
             ev, registry, graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType))
             .write.mode("overwrite").parquet(s"$root/decoded")
@@ -2298,8 +2275,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -2459,8 +2435,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = log
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -2501,8 +2476,7 @@ object CdcQueries {
         clock("decode_dump") { // the FULL log, before the tail is split off
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -2579,8 +2553,7 @@ object CdcQueries {
         // oracle input: the bulk-path full decode
         val registry = s.sparkContext.broadcast(Cdc.registry)
         val ev = s.read.parquet(logDir)
-          .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-          .as[graft.decode.ChangeEvent]
+          .transform(Epoch.events)
         Replay.decodeForMerge(ev, registry, None).updates
           .write.mode("overwrite").parquet(s"$root/decoded")
         // the query under test: scalar decode + subset projection
@@ -2629,8 +2602,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None,
             graft.decode.Framing.VarintDelimited).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
@@ -2679,8 +2651,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -2750,8 +2721,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registryV4)
           val ev = s.read.parquet(s"$root/logpre").unionByName(s.read.parquet(s"$root/logtail"))
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -2867,8 +2837,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registryV5)
           val ev = s.read.parquet(s"$root/log")
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -2954,8 +2923,7 @@ object CdcQueries {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(s"$root/logA").unionByName(s.read.parquet(s"$root/logB"))
             .unionByName(s.read.parquet(s"$root/tailA"))
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -3023,8 +2991,7 @@ object CdcQueries {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(s"$root/log")
             .unionByName(s.read.parquet(s"$root/tail-epoch=2").withColumn("epoch", lit(2L)))
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -3219,8 +3186,7 @@ object CdcQueries {
             .unionByName(s.read.parquet(s"$root/logtail"))
           (0 to 2).map { e =>
             val ev = log.filter(col("epoch") === e)
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent]
+              .transform(Epoch.events)
             Replay.decodeForMerge(ev, registry, None).updates.withColumn("epoch", lit(e))
           }.reduce(_.unionByName(_)).write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -3312,8 +3278,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -3411,8 +3376,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = logged
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -3454,8 +3418,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(logDir)
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -3640,8 +3603,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = logged
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -3855,8 +3817,7 @@ object CdcQueries {
         clock("decode_dump") {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           val ev = s.read.parquet(s"$root/logA").unionByName(s.read.parquet(s"$root/logB"))
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -4261,8 +4222,7 @@ object CdcQueries {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           (0 until 4).map { e =>
             val ev = s.read.parquet(s"$root/log$e")
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent]
+              .transform(Epoch.events)
             Replay.decodeForMerge(ev, registry, None).updates.withColumn("epoch", lit(e))
           }.reduce(_.unionByName(_)).write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -4359,9 +4319,9 @@ object CdcQueries {
         // here and the advisor would have nothing to discriminate; 8
         // rows/task gives enough shards that zipf sparsity leaves some
         // shards empty (uneven per-bucket file counts)
-        s.conf.set("spark.graft.merge.targetRowsPerTask", "8")
-        try clock("replay") { Replay.replayLog(s, logDir, tableDir, buckets = 8) }
-        finally s.conf.unset("spark.graft.merge.targetRowsPerTask")
+        graft.Conf.withConf(s, "spark.graft.merge.targetRowsPerTask" -> "8") {
+          clock("replay") { Replay.replayLog(s, logDir, tableDir, buckets = 8) }
+        }
         val snap = IceLite.load(tableDir)
         val counts = Compaction.health(snap).map(_.files)
         require(counts.min < counts.max,
@@ -4433,8 +4393,7 @@ object CdcQueries {
           val log = s.read.parquet(s"$root/logpre")
             .unionByName(s.read.parquet(s"$root/logtail"))
           val ev = log
-            .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent]
+            .transform(Epoch.events)
           Replay.decodeForMerge(ev, registry, None).updates
             .write.mode("overwrite").parquet(s"$root/decoded")
         }
@@ -4904,8 +4863,7 @@ object CdcQueries {
         val ev = LogGen.events(s, p)
         val registry = s.sparkContext.broadcast(Cdc.registry)
         Replay.decodeForMerge(
-          ev.select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent], registry, None)
+          Epoch.events(ev), registry, None)
           .updates.write.mode("overwrite").parquet(s"$root/decoded")
         import graft.lake.MatJoin
         ev.filter(col("offset") < 1500).repartition(3)
@@ -5120,8 +5078,7 @@ object CdcQueries {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           Seq(logA, logB).foreach { ld =>
             val ev = s.read.parquet(ld)
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent]
+              .transform(Epoch.events)
             Replay.decodeForMerge(ev, registry, None).updates
               .write.mode("append").parquet(s"$root/decoded")
           }
@@ -5222,8 +5179,7 @@ object CdcQueries {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           Seq(logA, logB).foreach { ld =>
             val ev = s.read.parquet(ld)
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent]
+              .transform(Epoch.events)
             Replay.decodeForMerge(ev, registry, None).updates
               .write.mode("append").parquet(s"$root/decoded")
           }
@@ -5346,8 +5302,7 @@ object CdcQueries {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           (0 until 3).foreach { i =>
             val ev = s.read.parquet(s"$root/log-$i")
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent]
+              .transform(Epoch.events)
             Replay.decodeForMerge(ev, registry, None).updates
               .write.mode("append").parquet(s"$root/decoded")
           }
@@ -5571,8 +5526,7 @@ object CdcQueries {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           evs.foreach { ev =>
             Replay.decodeForMerge(
-              ev.select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-                .as[graft.decode.ChangeEvent], registry, None)
+              Epoch.events(ev), registry, None)
               .updates.write.mode("append").parquet(s"$root/decoded")
           }
         }
@@ -5653,8 +5607,7 @@ object CdcQueries {
           val registry = s.sparkContext.broadcast(Cdc.registry)
           Seq(logA, logB).foreach { ld =>
             val ev = s.read.parquet(ld)
-              .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent]
+              .transform(Epoch.events)
             Replay.decodeForMerge(ev, registry, None).updates
               .write.mode("append").parquet(s"$root/decoded")
           }
@@ -5736,8 +5689,7 @@ object CdcQueries {
         val log = s.read.parquet(logDir)
         val registry = s.sparkContext.broadcast(Cdc.registry)
         val ev = log
-          .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-          .as[graft.decode.ChangeEvent]
+          .transform(Epoch.events)
         graft.decode.Decode.success(graft.decode.Decode.decode(
           ev, registry, graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType))
           .write.mode("overwrite").parquet(s"$root/decoded")
@@ -5802,8 +5754,7 @@ object CdcQueries {
         val log = s.read.parquet(logDir)
         val registry = s.sparkContext.broadcast(Cdc.registry)
         val ev = log
-          .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-          .as[graft.decode.ChangeEvent]
+          .transform(Epoch.events)
         graft.decode.Decode.success(graft.decode.Decode.decode(
           ev, registry, graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType))
           .write.mode("overwrite").parquet(s"$root/decoded")
@@ -5878,8 +5829,7 @@ object CdcQueries {
         val ev = LogGen.events(s, p)
         val registry = s.sparkContext.broadcast(Cdc.registry)
         graft.decode.Decode.success(graft.decode.Decode.decode(
-          ev.select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-            .as[graft.decode.ChangeEvent],
+          Epoch.events(ev),
           registry, graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType))
           .write.mode("overwrite").parquet(s"$root/decoded")
         val rules = Seq(
@@ -5956,8 +5906,7 @@ object CdcQueries {
         val log = s.read.parquet(logDir)
         val registry = s.sparkContext.broadcast(Cdc.registry)
         val ev = log
-          .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-          .as[graft.decode.ChangeEvent]
+          .transform(Epoch.events)
         graft.decode.Decode.success(graft.decode.Decode.decode(
           ev, registry, graft.registry.SchemaKey(Cdc.SchemaId, -1), Cdc.MessageType))
           .write.mode("overwrite").parquet(s"$root/decoded")
@@ -6211,8 +6160,7 @@ object CdcQueries {
         val registry = s.sparkContext.broadcast(Cdc.registry)
         clock("decode_dump") {
           Replay.decodeForMerge(
-            ev.select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent], registry, None)
+            Epoch.events(ev), registry, None)
             .updates.write.mode("overwrite").parquet(s"$root/decoded")
         }
         val ring = CryptoShred.keyringS(s, master = "graft-q198-master",
@@ -6285,8 +6233,7 @@ object CdcQueries {
         val registry = s.sparkContext.broadcast(Cdc.registry)
         clock("decode_dump") {
           Replay.decodeForMerge(
-            ev.select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-              .as[graft.decode.ChangeEvent], registry, None)
+            Epoch.events(ev), registry, None)
             .updates.write.mode("overwrite").parquet(s"$root/decoded")
         }
         val dec = s.read.parquet(s"$root/decoded")
@@ -6421,8 +6368,7 @@ object CdcQueries {
           Seq(logDir, log2Dir).foreach { ld0 =>
             Replay.decodeForMerge(
               s.read.parquet(ld0)
-                .select("payload", "schemaId", "schemaVersion", "messageType", "partition", "offset")
-                .as[graft.decode.ChangeEvent], registry, None)
+                .transform(Epoch.events), registry, None)
               .updates.write.mode("append").parquet(s"$root/decoded")
           }
         }

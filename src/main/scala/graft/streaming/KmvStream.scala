@@ -67,11 +67,7 @@ object KmvStream {
     import spark.implicits._
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(workRoot))
     val feedDir = s"$workRoot/feed"
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try StreamJoin.withStreamShuffle(spark, keyed.count()) {
+    StreamJoin.withRocksDbState(spark, keyed.count()) {
       (0 until chunks).foreach { i =>
         keyed.filter(col("band") === i).select("grp", "h")
           .coalesce(1).write.mode("append").parquet(feedDir)
@@ -95,9 +91,6 @@ object KmvStream {
           .start()
         q.awaitTermination()
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
     }
     spark.read.parquet(s"$workRoot/out")
   }

@@ -127,11 +127,7 @@ object Resequence {
     // watermark delay must cover the worst engineered lateness (one band)
     val delaySec = 2 * bandUs / 1000000L + 2
     val feedDir = s"$workRoot/feed"
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try StreamJoin.withStreamShuffle(spark, totalRows) {
+    StreamJoin.withRocksDbState(spark, totalRows) {
       (0 until chunks + 2).foreach { i =>
         val wave =
           if (i < chunks) banded.filter(col("__wave") === i).drop("__wave")
@@ -159,9 +155,6 @@ object Resequence {
           .start()
         q.awaitTermination()
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
     }
     spark.read.parquet(s"$workRoot/out")
   }

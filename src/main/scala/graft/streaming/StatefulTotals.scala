@@ -66,11 +66,7 @@ object StatefulTotals {
     val banded = feed.withColumn("__band",
       least(lit(chunks - 1), ((col("ts_us") - tmin) * chunks / span).cast("int")))
     val feedDir = s"$workRoot/feed"
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try StreamJoin.withStreamShuffle(spark, totalRows) {
+    StreamJoin.withRocksDbState(spark, totalRows) {
       (0 until chunks).foreach { i =>
         banded.filter(col("__band") === i).drop("__band")
           .coalesce(1).write.mode("append").parquet(feedDir)
@@ -89,9 +85,6 @@ object StatefulTotals {
           .start()
         q.awaitTermination()
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
     }
     spark.read.parquet(s"$workRoot/out")
   }

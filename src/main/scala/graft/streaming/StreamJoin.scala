@@ -39,9 +39,17 @@ object StreamJoin {
       .getOption("spark.graft.stream.rowsPerStatePartition").map(_.toLong).getOrElse(50000L)
     val n = math.max(4L, math.min(prev.toLong,
       (rows + rowsPerPartition - 1) / rowsPerPartition)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    graft.Conf.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
   }
+
+  /** [[withStreamShuffle]] on the RocksDB state store provider — the
+    * session shape of the stateful streaming operators; both settings are
+    * restored afterwards. */
+  private[graft] def withRocksDbState[T](spark: SparkSession, rows: Long)(body: => T): T =
+    graft.Conf.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      withStreamShuffle(spark, rows)(body)
+    }
 
   /** Append-mode inner interval join of two streaming frames: equi-key
     * plus `r.$rTime ∈ [l.$lTime, l.$lTime + tolSeconds]`. The right key

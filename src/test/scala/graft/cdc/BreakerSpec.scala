@@ -47,4 +47,32 @@ class BreakerSpec extends AnyFunSuite {
       graft.lake.IceLite.load(tableDir)).count()
     assert(n > 0)
   }
+
+  test("lineage: a quarantined epoch writes no row, its release writes one, fenced re-runs none") {
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft-breaker-lineage"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val logDir = s"$root/log"
+    val badLog = s"$root/bad"
+    val tableDir = s"$root/table"
+    LogGen.writeLog(spark, LogGen.Params(nEvents = 20, nRepos = 5,
+      pathsPerRepo = 4, v1Fraction = 0.5), logDir, epochs = 2)
+    // epoch 1: 3/10 bad → quarantined at tolerance 0.1
+    spark.read.parquet(logDir).withColumn("payload",
+        when(col("epoch") === 1 && col("offset").isin(10L, 11L, 12L), lit(Array[Byte](-1)))
+          .otherwise(col("payload")))
+      .write.partitionBy("epoch").mode("overwrite").parquet(badLog)
+    Breaker.replayGuarded(spark, badLog, tableDir, maxBadFraction = 0.1, buckets = 4)
+    assert(LineageRows.of(spark, tableDir) == Map("replay-0" -> 1L),
+      "only the applied epoch records lineage")
+    Breaker.release(spark, badLog, tableDir, 1L)
+    assert(LineageRows.of(spark, tableDir) == Map("replay-0" -> 1L, "replay-1" -> 1L))
+    val led = Lineage.read(spark, tableDir).filter(col("epochId") === "replay-1")
+      .select("routes").collect().head.getAs[scala.collection.Map[String, Long]](0)
+    assert(led("error") == 3L && led("success") == 7L, led.toString)
+    // fenced re-runs: a tolerant guarded replay fences both epochs
+    val again = Breaker.replayGuarded(spark, badLog, tableDir, maxBadFraction = 0.5)
+    assert(again.forall(!_.quarantined))
+    assert(LineageRows.of(spark, tableDir) == Map("replay-0" -> 1L, "replay-1" -> 1L),
+      "a fenced re-run writes no row")
+  }
 }

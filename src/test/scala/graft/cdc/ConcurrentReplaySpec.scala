@@ -59,6 +59,23 @@ class ConcurrentReplaySpec extends AnyFunSuite {
     val again = Replay.replayLog(spark, s"$root/logA", s"$root/table",
       buckets = 4, namespace = "wa")
     assert(again.stats.forall(st => !st.applied))
+
+    // lineage: one row per epoch, and each row counts that epoch's events
+    // once — a conflict-retried epoch re-runs whole, so its counters are
+    // the final attempt's, not the sum of every attempt
+    import spark.implicits._
+    val events = Seq("A" -> "wa", "B" -> "wb").flatMap { case (l, ns) =>
+      spark.read.parquet(s"$root/log$l").groupBy("epoch").count()
+        .as[(Long, Long)].collect().map { case (e, n) => s"$ns-$e" -> n }
+    }.toMap
+    val rows = Lineage.read(spark, s"$root/table")
+      .select("epochId", "partitions").collect()
+      .map(r => r.getString(0) -> r.getAs[scala.collection.Map[Int, Long]](1).values.sum)
+    assert(rows.map(_._1).sorted.toSeq == events.keys.toSeq.sorted, rows.toSeq.toString)
+    rows.foreach { case (id, n) =>
+      assert(n == events(id), s"$id counted $n events, the log holds ${events(id)} " +
+        s"(conflict retries this run: $retries)")
+    }
   }
 
   test("duplicate fence namespaces are refused") {

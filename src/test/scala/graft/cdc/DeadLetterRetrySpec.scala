@@ -81,6 +81,9 @@ class DeadLetterRetrySpec extends AnyFunSuite {
     // fresh tag: everything consumes normally
     val ok = Replay.retryDeadLetters(spark, tableDir, full, "retry-y")
     assert(ok.applied && ok.remaining == 0)
+    // lineage: each applied retry records one row, the fenced one none
+    assert(LineageRows.of(spark, tableDir) == Map("replay-0" -> 1L, "replay-1" -> 1L,
+      "retry-x" -> 1L, "retry-y" -> 1L))
 
     // crash-window recovery: simulate 'crashed between commit and flush' by
     // deleting the store and replaying the (fully fenced) log — the direct

@@ -136,6 +136,11 @@ class ExpectationsSpec extends AnyFunSuite {
     // a second retry under the same rules: nothing new conforms
     val er2 = Expectations.retryExpectations(spark, tableDir, relaxed, "relax-2")
     assert(er2.attempted == 1 && er2.merged == 0 && er2.remaining == 1)
+    // every applied retry records one lineage row; a reused tag fences
+    val er3 = Expectations.retryExpectations(spark, tableDir, relaxed, "relax-2")
+    assert(!er3.applied)
+    assert(LineageRows.of(spark, tableDir) == Map("expect-0" -> 1L,
+      "fix-schema" -> 1L, "relax-1" -> 1L, "relax-2" -> 1L))
   }
 
   test("Tail with rules enforces the identical contract as the batch replay") {
@@ -218,6 +223,15 @@ class ExpectationsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Expectations.releaseQuarantined(spark, logDir, tableDir, 0L, fixed)
     }
+
+    // lineage: the quarantined epoch wrote no row, its release wrote one,
+    // and a fenced re-run of the whole log writes none
+    assert(LineageRows.of(spark, tableDir) == Map("expect-0" -> 1L, "expect-1" -> 1L))
+    val routes = Lineage.read(spark, tableDir).filter(col("epochId") === "expect-0")
+      .select("routes").collect().head.getAs[scala.collection.Map[String, Long]](0)
+    assert(routes == Map("success" -> 2L, Expectations.Route -> 1L), routes.toString)
+    Expectations.replayWithExpectations(spark, logDir, tableDir, fixed, buckets = 2)
+    assert(LineageRows.of(spark, tableDir) == Map("expect-0" -> 1L, "expect-1" -> 1L))
   }
 
   test("empty rule set is refused; violating-only key never reaches the table") {

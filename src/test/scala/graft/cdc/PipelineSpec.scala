@@ -485,9 +485,9 @@ class PipelineSpec extends AnyFunSuite {
     }: _*)
     // pin the per-task byte target low so the scale-adaptive sizing still
     // chooses the multi-shard regime this regression test is about
-    spark.conf.set("spark.graft.merge.targetBytesPerTask", "1")
-    try Merge.mergeEpoch(spark, dir, df, "seq", "op", "shard-0")
-    finally spark.conf.unset("spark.graft.merge.targetBytesPerTask")
+    graft.Conf.withConf(spark, "spark.graft.merge.targetBytesPerTask" -> "1") {
+      Merge.mergeEpoch(spark, dir, df, "seq", "op", "shard-0")
+    }
     // one parquet file per non-empty (bucket, shard): ≥2 files in (nearly)
     // every bucket proves both shards carry rows
     val filesPerBucket = IceLite.load(dir).files.groupBy(_.bucket).view.mapValues(_.size)

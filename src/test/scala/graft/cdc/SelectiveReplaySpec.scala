@@ -38,6 +38,9 @@ class SelectiveReplaySpec extends AnyFunSuite {
     val again = Replay.replaySelective(spark, s"$root/log", s"$root/slice",
       s"repo = '$target'", buckets = 4)
     assert(again.stats.forall(!_.applied))
+    // one lineage row per applied epoch; the fenced re-run adds none
+    assert(LineageRows.of(spark, s"$root/slice") ==
+      Map("selective-0" -> 1L, "selective-1" -> 1L))
   }
 
   test("delimited framing: keys decode per message, matching segments replay") {

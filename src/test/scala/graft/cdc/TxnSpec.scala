@@ -83,6 +83,13 @@ class TxnSpec extends AnyFunSuite {
     val again = Txn.applyLog(spark, logDir, txnDir, tables, buckets = 4)
     assert(again.flatMap(_.perTable).forall(!_.applied))
 
+    // lineage: exactly one row per table per epoch through the crash, the
+    // recovery (table a's slice fenced) and the idempotent re-run
+    tables.foreach { t =>
+      assert(LineageRows.of(spark, t) == Map("txn-0" -> 1L, "txn-1" -> 1L),
+        s"$t: ${LineageRows.of(spark, t)}")
+    }
+
     // post-recovery consistent read advances to the epoch-1 cut
     val cut2 = Txn.consistentRead(txnDir, tables)
     assert(cut2.forall(_._2.hasEpoch("txn-1")))

@@ -56,9 +56,9 @@ class KeyBloomSpec extends AnyFunSuite {
     // workload blooms exist for); pin the per-task row target low so each
     // epoch shards into several delta files per bucket regardless of the
     // scale-adaptive merge task sizing
-    spark.conf.set("spark.graft.merge.targetRowsPerTask", "64")
-    try Replay.replayLog(spark, logDir, tableDir, buckets = 4)
-    finally spark.conf.unset("spark.graft.merge.targetRowsPerTask")
+    graft.Conf.withConf(spark, "spark.graft.merge.targetRowsPerTask" -> "64") {
+      Replay.replayLog(spark, logDir, tableDir, buckets = 4)
+    }
     val snap = IceLite.load(tableDir)
 
     // every delta file in this small-file regime carries a bloom, and it
