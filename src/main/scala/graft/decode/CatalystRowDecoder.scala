@@ -11,17 +11,25 @@ import graft.proto.Descriptors._
 import graft.proto.Descriptors.FType._
 import graft.proto.ProtoJson
 
-/** Catalyst-native twin of [[RowDecoder]]: decodes wire bytes straight into
-  * `InternalRow` values — strings become ZERO-COPY `UTF8String` slices of
-  * the payload buffer (no `new String` materialization and no Row →
-  * InternalRow encoder pass afterwards; the exchange's UnsafeRow conversion
-  * is the single copy). Same semantics as RowDecoder: reader-schema
-  * projection by field number, writer-field gating, proto3 defaults,
-  * singular-message merge (slice concat), oneof last-member-wins, map /
-  * repeated / Timestamp handling. Equivalence is property-tested against
-  * RowDecoder (EncodeDecodeSpec).
+/** The wire → row kernel behind every decode: `Decode.decode` (bulk,
+  * replay and tail) and the `proto_decode` expression. It pre-compiles the
+  * READER descriptor into flat arrays (field number → ordinal / type /
+  * nested decoder) and decodes wire bytes straight into `InternalRow`
+  * values: no intermediate tree, no per-field map lookups, and strings
+  * become ZERO-COPY `UTF8String` slices of the payload buffer (no
+  * `new String` materialization and no Row → InternalRow encoder pass; the
+  * exchange's UnsafeRow conversion is the single copy). Semantics:
+  * reader-schema projection by field number, writer-field gating, proto3
+  * defaults, singular-message merge (slice concat), oneof last-member-wins,
+  * map last-entry-wins, repeated / Timestamp handling. Property-tested
+  * against the independent tree decoder, `DynMsg.decode` +
+  * `SparkSchema.toRowAs` (EncodeDecodeSpec).
   */
 final class CatalystRowDecoder(fs: FileSet, val desc: MessageDesc,
+    /** restrict decoded field numbers (top level only): the WRITER
+      * descriptor's set, so a v1-tagged event never surfaces v2-only fields
+      * even if the bytes carry them, or the fields a query reads
+      * (`PruneProtoDecode`). Every other field is skipped as unknown. */
     allowed: Option[Set[Int]] = None,
     /** message names on the construction path — rejects RECURSIVE message
       * types (legal protobuf, unrepresentable as a flat InternalRow schema)
@@ -294,11 +302,7 @@ final class CatalystRowDecoder(fs: FileSet, val desc: MessageDesc,
       // Zero-copy slice, raw bytes kept VERBATIM even if not valid UTF-8 —
       // protobuf-java parity (ByteString stores the wire bytes; lazy
       // replacement happens only on String access), and what keeps a
-      // decode→re-encode round trip byte-identical. KNOWN DIVERGENCE: the
-      // Row-based twin (RowDecoder) goes through new String(..., UTF_8),
-      // which U+FFFD-substitutes malformed sequences — out-of-contract
-      // input (proto strings MUST be UTF-8) can therefore hash/compare
-      // differently between the two paths. Eager validation here was
+      // decode→re-encode round trip byte-identical. Eager validation was
       // measured at 15-30% off the bulk decode throughput — not worth
       // paying on every valid string to normalize a protocol violation.
       UTF8String.fromBytes(r.buf, p, len)
@@ -331,7 +335,9 @@ final class CatalystRowDecoder(fs: FileSet, val desc: MessageDesc,
     case other => throw new ProtoParseException(s"not a scalar: $other")
   }
 
-  /** catalyst TimestampType = micros since epoch. */
+  /** catalyst TimestampType = micros since epoch. `seconds` is an
+    * untrusted int64: a value past the micros range throws, so the event
+    * routes to `error` instead of wrapping into a wrong timestamp. */
   private def decodeTimestampMicros(r: Reader): java.lang.Long = {
     var secs = 0L; var nanos = 0L
     while (r.hasRemaining) {
@@ -340,6 +346,6 @@ final class CatalystRowDecoder(fs: FileSet, val desc: MessageDesc,
       else if (fn == 2 && wt == Wire.WtVarint) nanos = r.readVarint64()
       else r.skip(wt, fn)
     }
-    java.lang.Long.valueOf(secs * 1000000L + nanos / 1000L)
+    java.lang.Long.valueOf(Math.addExact(Math.multiplyExact(secs, 1000000L), nanos / 1000L))
   }
 }

@@ -72,16 +72,15 @@ object SparkSchema {
     case other => throw new IllegalArgumentException(s"no scalar Spark type for $other")
   }
 
-  /** DynMsg → Row under structFor(desc). proto3 semantics: absent singular
-    * scalars materialize as their default (0/""/false), absent messages as
-    * null, absent repeated as empty array. */
-  def toRow(fs: FileSet, m: DynMsg): Row = toRowAs(fs, m.desc, m)
-
-  /** Descriptor-version-aware projection (BASELINE.json north_star): the
-    * message may have been decoded under the WRITER's descriptor version;
-    * fields are resolved into the READER schema by FIELD NUMBER (identity),
-    * so add-column fills defaults, rename follows the reader's name, and
-    * int32→int64 widening is transparent (PLong either way). */
+  /** DynMsg → Row under structFor(desc), the independent tree decoder's
+    * row form. proto3 semantics: absent singular scalars materialize as
+    * their default (0/""/false), absent messages as null, absent repeated
+    * as empty array. Descriptor-version-aware projection (BASELINE.json
+    * north_star): the message may have been decoded under the WRITER's
+    * descriptor version; fields are resolved into the READER schema by
+    * FIELD NUMBER (identity), so add-column fills defaults, rename follows
+    * the reader's name, and int32→int64 widening is transparent (PLong
+    * either way). */
   def toRowAs(fs: FileSet, desc: MessageDesc, m: DynMsg): Row = {
     val fields = desc.fieldsInNumberOrder
     val values = new Array[Any](fields.length)

@@ -3,10 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.types.{BinaryType, DataType}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import graft.decode.{RowDecoder, SparkSchema}
+import graft.decode.{CatalystRowDecoder, SparkSchema}
 import graft.proto.Descriptors.{FileSet, MessageDesc}
 import graft.proto.{DescParser, ProtoTextParser}
 
@@ -14,9 +13,13 @@ import graft.proto.{DescParser, ProtoTextParser}
   * protobuf message into a struct typed by a descriptor (SURVEY.md §7.6
   * sugar; the bulk path remains the typed mapPartitions in graft.decode).
   *
-  * The schema travels as (schemaText | descBytes) so the expression is
-  * serializable to executors; the compiled RowDecoder and the
-  * Catalyst converter are rebuilt lazily per JVM. Returns null for
+  * It runs the same [[CatalystRowDecoder]] as `Decode.decode`, so a
+  * payload decodes to the same values on either path; the decoder's
+  * `InternalRow` is already Catalyst's internal form and is returned as
+  * is. Its zero-copy string slices point into the binary `child.eval`
+  * returns, which nothing mutates. The schema travels as
+  * (schemaText | descBytes) so the expression is serializable to
+  * executors; the decoder is rebuilt lazily per JVM. Returns null for
   * malformed payloads (SQL-friendly error routing: pair with a
   * `payload IS NOT NULL AND proto_decode(payload) IS NULL` dead-letter
   * filter).
@@ -44,9 +47,7 @@ final case class ProtoDecode(
   @transient private lazy val desc: MessageDesc =
     fs.findMessage(messageType).getOrElse(
       throw new graft.proto.Descriptors.UnknownMessageTypeException(messageType))
-  @transient private lazy val decoder = new RowDecoder(fs, desc, allowed)
-  @transient private lazy val toCatalyst =
-    CatalystTypeConverters.createToCatalystConverter(dataType)
+  @transient private lazy val decoder = new CatalystRowDecoder(fs, desc, allowed)
 
   /** struct ordinal → proto field number (both sides order fields by
     * number: SparkSchema.structFor and the decoder's fieldsInNumberOrder). */
@@ -61,7 +62,7 @@ final case class ProtoDecode(
       s"proto_decode expects BINARY, got ${child.dataType.sql}")
 
   override protected def nullSafeEval(input: Any): Any = {
-    try toCatalyst(decoder.decode(input.asInstanceOf[Array[Byte]]))
+    try decoder.decode(input.asInstanceOf[Array[Byte]])
     catch { case _: Exception => null } // malformed → null (error route)
   }
 

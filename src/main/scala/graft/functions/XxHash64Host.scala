@@ -1,114 +1,29 @@
 package graft.functions
 
-/** Host-side (driver) XXH64, implemented from the public xxHash spec
-  * (https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md), bit-for-
-  * bit compatible with Spark's `xxhash64` expression so metadata-layer code
-  * (IceLite point lookups) can derive a row's hash bucket without launching
-  * a Spark job. Spark chains multi-column hashes by feeding each column's
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Host-side (driver) `xxhash64`: Spark's own XXH64 kernel called
+  * directly, so metadata-layer code (IceLite point lookups, key blooms,
+  * text-index buckets) can derive a row's hash bucket without launching a
+  * Spark job. Spark chains multi-column hashes by feeding each column's
   * hash as the next column's seed, starting at seed 42 — `hashColumns`
-  * mirrors that.
-  *
-  * Compatibility is property-tested against Spark's own expression over
-  * random keys (XxHash64HostSpec).
+  * mirrors that, and the chaining and `pmod` bucket parity with the
+  * `xxhash64` expression are property-tested (XxHash64HostSpec).
   */
 object XxHash64Host {
 
-  private final val P1 = 0x9E3779B185EBCA87L
-  private final val P2 = 0xC2B2AE3D27D4EB4FL
-  private final val P3 = 0x165667B19E3779F9L
-  private final val P4 = 0x85EBCA77C2B2AE63L
-  private final val P5 = 0x27D4EB2F165667C5L
-
-  @inline private def rotl(x: Long, r: Int): Long = java.lang.Long.rotateLeft(x, r)
-  @inline private def round(acc: Long, input: Long): Long = rotl(acc + input * P2, 31) * P1
-  @inline private def mergeRound(h: Long, v: Long): Long = (h ^ round(0L, v)) * P1 + P4
-
-  @inline private def readLongLE(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) |
-      ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24) |
-      ((b(i + 4) & 0xffL) << 32) |
-      ((b(i + 5) & 0xffL) << 40) |
-      ((b(i + 6) & 0xffL) << 48) |
-      ((b(i + 7) & 0xffL) << 56)
-
-  @inline private def readIntLE(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) |
-      ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) |
-      ((b(i + 3) & 0xff) << 24)
-
-  private def avalanche(h0: Long): Long = {
-    var h = h0
-    h ^= h >>> 33
-    h *= P2
-    h ^= h >>> 29
-    h *= P3
-    h ^= h >>> 32
-    h
-  }
-
-  def hashBytes(bytes: Array[Byte], seed: Long): Long = {
-    val len = bytes.length
-    var i = 0
-    var h =
-      if (len >= 32) {
-        var v1 = seed + P1 + P2
-        var v2 = seed + P2
-        var v3 = seed
-        var v4 = seed - P1
-        while (i + 32 <= len) {
-          v1 = round(v1, readLongLE(bytes, i))
-          v2 = round(v2, readLongLE(bytes, i + 8))
-          v3 = round(v3, readLongLE(bytes, i + 16))
-          v4 = round(v4, readLongLE(bytes, i + 24))
-          i += 32
-        }
-        var acc = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
-        acc = mergeRound(acc, v1); acc = mergeRound(acc, v2)
-        acc = mergeRound(acc, v3); acc = mergeRound(acc, v4)
-        acc
-      } else seed + P5
-    h += len
-    while (i + 8 <= len) {
-      h ^= round(0L, readLongLE(bytes, i))
-      h = rotl(h, 27) * P1 + P4
-      i += 8
-    }
-    if (i + 4 <= len) {
-      h ^= (readIntLE(bytes, i) & 0xffffffffL) * P1
-      h = rotl(h, 23) * P2 + P3
-      i += 4
-    }
-    while (i < len) {
-      h ^= (bytes(i) & 0xffL) * P5
-      h = rotl(h, 11) * P1
-      i += 1
-    }
-    avalanche(h)
-  }
-
   /** Fixed-width 8-byte input (Spark's hash of LongType / DoubleType bits /
     * TimestampType micros). */
-  def hashLong(value: Long, seed: Long): Long = {
-    var h = seed + P5 + 8L
-    h ^= round(0L, value)
-    h = rotl(h, 27) * P1 + P4
-    avalanche(h)
-  }
+  def hashLong(value: Long, seed: Long): Long = XXH64.hashLong(value, seed)
 
   /** Fixed-width 4-byte input (Spark's hash of Byte/Short/Int/Date/Float
     * bits — all promoted to int32). */
-  def hashInt(value: Int, seed: Long): Long = {
-    var h = seed + P5 + 4L
-    h ^= (value & 0xffffffffL) * P1
-    h = rotl(h, 23) * P2 + P3
-    avalanche(h)
-  }
+  def hashInt(value: Int, seed: Long): Long = XXH64.hashInt(value, seed)
 
+  /** Spark's hash of StringType: the value's UTF-8 bytes. */
   def hashString(s: String, seed: Long): Long =
-    hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), seed)
+    XXH64.hashUTF8String(UTF8String.fromString(s), seed)
 
   /** Spark's default seed for the `xxhash64` SQL function. */
   val SparkSeed = 42L

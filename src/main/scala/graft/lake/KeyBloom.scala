@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *
   * Layout: classic Bloom, 10 bits/key, k=7 probes by double hashing of
   * the Spark-canonical xxhash64 of the key columns (seed 42 — the same
-  * hash the host-side serving path already reproduces bit-for-bit in
-  * [[graft.functions.XxHash64Host]], property-tested against Spark's
-  * codegen'd `xxhash64`). Only files with ≤ [[RowCap]] rows get a
+  * hash the host-side serving path computes with Spark's own XXH64
+  * kernel in [[graft.functions.XxHash64Host]], property-tested against
+  * the `xxhash64` expression). Only files with ≤ [[RowCap]] rows get a
   * bloom (64 KiB cap): delta files are O(batch/buckets) rows so they
   * qualify; big compacted base files don't — they hold the bucket's
   * resolved state and must be opened anyway when the key may be live.

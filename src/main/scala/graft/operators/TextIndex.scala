@@ -41,8 +41,9 @@ object TextIndex {
       pmod(xxhash64(col("token")), lit(buckets)).cast("int")
 
     /** Host-side bucket of one query term — must agree with [[bucketCol]];
-      * graft.functions.XxHash64Host is property-tested against Spark's
-      * xxhash64 expression. */
+      * graft.functions.XxHash64Host calls Spark's own XXH64 kernel, and its
+      * seed and `pmod` parity are property-tested against the xxhash64
+      * expression. */
     def bucketOf(term: String): Int =
       java.lang.Math.floorMod(
         graft.functions.XxHash64Host.hashString(term, graft.functions.XxHash64Host.SparkSeed),

@@ -95,4 +95,77 @@ class ProtoDecodeExpressionSpec extends AnyFunSuite {
       prevActive.foreach(SS.setActiveSession)
     }
   }
+
+  test("proto_decode ≡ Decode.decode, invalid UTF-8 bytes included") {
+    import spark.implicits._
+    import graft.proto.Wire
+    import graft.decode.{ChangeEvent, Decode}
+    import org.apache.spark.sql.types._
+    // RepoChange v2 plus a map and a oneof, so one payload set covers
+    // duplicated map keys and a oneof set twice
+    val text = Cdc.protoV2.replace("string author  = 8;",
+      "string author  = 8;\n  map<string, int64> attrs = 9;\n" +
+        "  oneof body { string note = 10; int64 size = 11; }")
+    val key = graft.registry.SchemaKey("repo_change_ext", 1)
+    val reg = spark.sparkContext.broadcast(graft.registry.DescriptorRegistry(
+      key -> graft.proto.ProtoTextParser.parse(text, "repo_change_ext.proto")))
+    def msg(body: Wire.Writer => Unit): Array[Byte] = {
+      val w = new Wire.Writer
+      w.writeLenDelimited(1, "r1".getBytes("UTF-8"))
+      w.writeLenDelimited(2, "p".getBytes("UTF-8"))
+      w.writeTag(6, Wire.WtVarint); w.writeVarint64(3L)
+      body(w)
+      w.toBytes
+    }
+    def entry(k: String, v: Long): Array[Byte] = {
+      val e = new Wire.Writer
+      e.writeLenDelimited(1, k.getBytes("UTF-8"))
+      e.writeTag(2, Wire.WtVarint); e.writeVarint64(v)
+      e.toBytes
+    }
+    val badUtf8 = Array(0xC3.toByte, 0x28.toByte)
+    val payloads = Seq(
+      msg(_.writeLenDelimited(8, "alice".getBytes("UTF-8"))),
+      msg { w => w.writeLenDelimited(5, badUtf8); w.writeLenDelimited(8, badUtf8) },
+      msg { w =>
+        w.writeLenDelimited(9, entry("k", 1L)); w.writeLenDelimited(9, entry("j", 2L))
+        w.writeLenDelimited(9, entry("k", 3L))
+      },
+      msg { w => w.writeLenDelimited(10, "n".getBytes("UTF-8")); w.writeTag(11, Wire.WtVarint); w.writeVarint64(7L) },
+      msg { w => w.writeTag(11, Wire.WtVarint); w.writeVarint64(7L); w.writeLenDelimited(10, "m".getBytes("UTF-8")) })
+    val events = payloads.zipWithIndex.map { case (p, i) =>
+      ChangeEvent(p, key.schemaId, key.version, "RepoChange", 0, i.toLong)
+    }.toDS()
+
+    // every string read as its raw bytes
+    def binary(t: DataType): DataType = t match {
+      case StringType => BinaryType
+      case st: StructType => StructType(st.fields.map(f => f.copy(dataType = binary(f.dataType))))
+      case at: ArrayType => at.copy(elementType = binary(at.elementType))
+      case mt: MapType => MapType(binary(mt.keyType), binary(mt.valueType), mt.valueContainsNull)
+      case other => other
+    }
+    def norm(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case m: scala.collection.Map[_, _] => m.map { case (k, x) => norm(k) -> norm(x) }.toMap
+      case r: org.apache.spark.sql.Row => r.toSeq.map(norm)
+      case sq: Seq[_] => sq.map(norm)
+      case other => other
+    }
+    def byOffset(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Any]] = {
+      val fields = df.schema.fields.filterNot(f => f.name == "offset" || f.name == "partition")
+      df.select(col("offset") +: fields.map(f => col(f.name).cast(binary(f.dataType)).as(f.name)): _*)
+        .collect().map(r => r.getLong(0) -> r.toSeq.tail.map(norm)).toMap
+    }
+    val bulk = byOffset(Decode.success(Decode.decode(events, reg, key, "RepoChange")))
+    val viaExpr = byOffset(events.toDF()
+      .select($"offset", ProtoFunctions.proto_decode($"payload", text, "RepoChange").as("m"))
+      .select("offset", "m.*"))
+    assert(bulk.size == payloads.size)
+    assert(viaExpr == bulk)
+    // the bytes are kept verbatim, not replaced with U+FFFD
+    val content = events.toDF().select(ProtoFunctions.proto_decode($"payload", text, "RepoChange")
+      .getField("content").cast("binary")).as[Array[Byte]].collect()
+    assert(content.exists(_.sameElements(badUtf8)))
+  }
 }

@@ -9,9 +9,16 @@ import PValue._
 /** Hardening regressions from the codec review: wire-type mismatches must
   * take unknown-field semantics (skip, never desync), unknown GROUPs skip
   * by tag balancing, enum map values resolve to names with typed defaults,
-  * proto2 explicit defaults surface, and JSON integer parsing range-checks
-  * instead of truncating. */
+  * proto2 explicit defaults surface, JSON integer parsing range-checks
+  * instead of truncating, and a Timestamp past the micros range is an
+  * error, never a wrapped value. */
 class CodecHardeningSpec extends AnyFunSuite {
+
+  lazy val spark: org.apache.spark.sql.SparkSession = org.apache.spark.sql.SparkSession.builder()
+    .master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   private val fs = ProtoTextParser.parse(
     """syntax = "proto3";
@@ -35,9 +42,7 @@ class CodecHardeningSpec extends AnyFunSuite {
     val dec = DynMsg.decode(fs, m, w.toBytes)
     assert(!dec.fields.contains(1), "mismatched field must be dropped, not parsed")
     assert(dec.fields(4) == PLong(99L))
-    // same through the row decoders
-    val row = new graft.decode.RowDecoder(fs, m).decode(w.toBytes)
-    assert(row.getAs[Int](0) == 0 && row.getAs[Long](3) == 99L)
+    // same through the row decoder
     val irow = new graft.decode.CatalystRowDecoder(fs, m).decode(w.toBytes)
     assert(irow.getInt(0) == 0 && irow.getLong(3) == 99L)
   }
@@ -69,8 +74,6 @@ class CodecHardeningSpec extends AnyFunSuite {
       w.toBytes
     }
     val bytes = entry("x", Some(2)) ++ entry("y", None)
-    val row = new graft.decode.RowDecoder(fs, m).decode(bytes)
-    assert(row.getAs[Map[String, String]](2) == Map("x" -> "BLUE", "y" -> "RED"))
     val irow = new graft.decode.CatalystRowDecoder(fs, m).decode(bytes)
     val mp = irow.getMap(2)
     val got = (0 until mp.numElements()).map(i =>
@@ -89,8 +92,6 @@ class CodecHardeningSpec extends AnyFunSuite {
       proto2 = true, defaultValue = Some("fast"))
     val md = MessageDesc("D", "hard2.D", Vector(f, fStr), Vector.empty, Vector.empty)
     val fs2 = FileSet(Vector(FileDesc("d.proto", "hard2", Vector(md), Vector.empty, "proto2")))
-    val row = new graft.decode.RowDecoder(fs2, md).decode(Array.emptyByteArray)
-    assert(row.getAs[Int](0) == 3 && row.getAs[String](1) == "fast")
     val irow = new graft.decode.CatalystRowDecoder(fs2, md).decode(Array.emptyByteArray)
     assert(irow.getInt(0) == 3 && irow.getUTF8String(1).toString == "fast")
   }
@@ -101,7 +102,6 @@ class CodecHardeningSpec extends AnyFunSuite {
     val fs3 = FileSet(Vector(FileDesc("h.proto", "hard3", Vector(md), Vector.empty, "proto3")))
     val w = new Wire.Writer
     w.writeTag(500000000, Wire.WtVarint); w.writeVarint64(5L)
-    assert(new graft.decode.RowDecoder(fs3, md).decode(w.toBytes).getAs[Long](0) == 5L)
     assert(new graft.decode.CatalystRowDecoder(fs3, md).decode(w.toBytes).getLong(0) == 5L)
   }
 
@@ -135,9 +135,6 @@ class CodecHardeningSpec extends AnyFunSuite {
     assert(md.fields.find(_.name == "retries").get.defaultValue.contains("3"))
     assert(md.fields.find(_.name == "mode").get.defaultValue.contains("fast"))
     assert(md.fields.find(_.name == "delta").get.defaultValue.contains("-7"))
-    val row = new graft.decode.RowDecoder(fs2, md).decode(Array.emptyByteArray)
-    assert(row.getAs[Int](0) == 3 && row.getAs[String](1) == "fast" &&
-      row.getAs[Int](2) == -7 && row.getAs[Boolean](3))
     val irow = new graft.decode.CatalystRowDecoder(fs2, md).decode(Array.emptyByteArray)
     assert(irow.getInt(0) == 3 && irow.getUTF8String(1).toString == "fast" &&
       irow.getInt(2) == -7 && irow.getBoolean(3))
@@ -178,5 +175,39 @@ class CodecHardeningSpec extends AnyFunSuite {
     intercept[MessageEncodingException] {
       ProtoJson.rfc3339ToTimestamp(ts, "not-a-time")
     }
+  }
+
+  test("Timestamp seconds past the micros range route to error instead of wrapping") {
+    import spark.implicits._
+    import graft.decode.{ChangeEvent, Decode, Route}
+    val text =
+      """syntax = "proto3";
+        |package hard6;
+        |import "google/protobuf/timestamp.proto";
+        |message E { string id = 1; google.protobuf.Timestamp at = 2; }
+        |""".stripMargin
+    val fsT = ProtoTextParser.parse(text, "e.proto")
+    def event(seconds: Long, nanos: Long): Array[Byte] = {
+      val ts = new Wire.Writer
+      ts.writeTag(1, Wire.WtVarint); ts.writeVarint64(seconds)
+      ts.writeTag(2, Wire.WtVarint); ts.writeVarint64(nanos)
+      val w = new Wire.Writer
+      w.writeLenDelimited(1, "e1".getBytes("UTF-8"))
+      w.writeLenDelimited(2, ts.toBytes)
+      w.toBytes
+    }
+    val huge = event(1L << 50, 0L)
+    val key = graft.registry.SchemaKey("hard6", 1)
+    val reg = spark.sparkContext.broadcast(graft.registry.DescriptorRegistry(key -> fsT))
+    val events = Seq(ChangeEvent(huge, "hard6", 1, "hard6.E", 0, 0L)).toDS()
+    val routes = Decode.decode(events, reg, key, "hard6.E").select("route").as[String].collect()
+    assert(routes.toSeq == Seq(Route.Error))
+    val expr = graft.functions.ProtoDecode(
+      org.apache.spark.sql.catalyst.expressions.Literal(huge), Left(text), "hard6.E")
+    assert(expr.eval(org.apache.spark.sql.catalyst.InternalRow.empty) == null)
+    // an in-range value still decodes to micros
+    val irow = new graft.decode.CatalystRowDecoder(fsT, fsT.findMessage("hard6.E").get)
+      .decode(event(1700000000L, 5000L))
+    assert(irow.getLong(1) == 1700000000000005L)
   }
 }

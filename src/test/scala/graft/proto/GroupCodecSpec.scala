@@ -73,15 +73,10 @@ class GroupCodecSpec extends AnyFunSuite {
   test("row decoders emit groups as nested structs, equal to the DynMsg conversion path") {
     val viaDyn = graft.decode.SparkSchema.toRowAs(fs, outerDesc,
       DynMsg.decode(fs, outerDesc, sampleBytes))
-    val viaRow = new graft.decode.RowDecoder(fs, outerDesc).decode(sampleBytes)
-    assert(viaRow.getAs[org.apache.spark.sql.Row](0).getAs[String](0) == "key")
-    assert(viaRow.getAs[org.apache.spark.sql.Row](0).getAs[Long](1) == 7L)
-    assert(viaRow.getAs[Seq[org.apache.spark.sql.Row]](1).map(_.getAs[Long](0)) == Vector(10L, 11L))
-    assert(viaRow.getAs[Seq[org.apache.spark.sql.Row]](1).head
-      .getAs[org.apache.spark.sql.Row](1).getAs[Boolean](0))
-    assert(viaRow.getAs[Long](2) == 99L)
-    assert(viaDyn.toString == viaRow.toString)
     val irow = new graft.decode.CatalystRowDecoder(fs, outerDesc).decode(sampleBytes)
+    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(
+      graft.decode.SparkSchema.structFor(fs, outerDesc))
+    assert(toScala(irow) == viaDyn)
     val metaRow = irow.getStruct(0, 2)
     assert(metaRow.getUTF8String(0).toString == "key" && metaRow.getLong(1) == 7L)
     val itemsArr = irow.getArray(1)
@@ -104,9 +99,8 @@ class GroupCodecSpec extends AnyFunSuite {
     val meta = m.fields(1).asInstanceOf[PMsg].v
     assert(meta.getByName("k").contains(PStr("first")))
     assert(meta.getByName("n").contains(PLong(5L)))
-    val row = new graft.decode.RowDecoder(fs, outerDesc).decode(w.toBytes)
-    val metaRow = row.getAs[org.apache.spark.sql.Row](0)
-    assert(metaRow.getAs[String](0) == "first" && metaRow.getAs[Long](1) == 5L)
+    val metaRow = new graft.decode.CatalystRowDecoder(fs, outerDesc).decode(w.toBytes).getStruct(0, 2)
+    assert(metaRow.getUTF8String(0).toString == "first" && metaRow.getLong(1) == 5L)
   }
 
   test("groups print/parse as JSON objects under the field name") {
@@ -159,7 +153,6 @@ class GroupCodecSpec extends AnyFunSuite {
     mm.writeTag(3, Wire.WtEndGroup)
     for (bytes <- Seq(t.toBytes, mm.toBytes)) {
       intercept[Wire.ProtoParseException] { DynMsg.decode(fs, outerDesc, bytes) }
-      intercept[Wire.ProtoParseException] { new graft.decode.RowDecoder(fs, outerDesc).decode(bytes) }
       intercept[Wire.ProtoParseException] { new graft.decode.CatalystRowDecoder(fs, outerDesc).decode(bytes) }
     }
   }
@@ -172,7 +165,6 @@ class GroupCodecSpec extends AnyFunSuite {
     mm.writeTag(99, Wire.WtStartGroup)
     mm.writeTag(98, Wire.WtEndGroup)
     intercept[Wire.ProtoParseException] { DynMsg.decode(fs, outerDesc, mm.toBytes) }
-    intercept[Wire.ProtoParseException] { new graft.decode.RowDecoder(fs, outerDesc).decode(mm.toBytes) }
     intercept[Wire.ProtoParseException] { new graft.decode.CatalystRowDecoder(fs, outerDesc).decode(mm.toBytes) }
     // a well-formed unknown group (matching END, nested) still skips cleanly
     val ok = new Wire.Writer
