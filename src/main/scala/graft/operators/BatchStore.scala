@@ -30,6 +30,25 @@ private[graft] object BatchStore {
     * swept. Leading underscore keeps the marker invisible to Spark. */
   val ConsolidatedMarker = "_CONSOLIDATED"
 
+  /** Run two independent committer-dominated writes at once (guide §2.6
+    * overlap of independent jobs — distinct target dirs, so no committer
+    * staging collision): `background` on the global pool, `foreground` on
+    * the caller's thread. `blocking` lets the fork-join pool add a thread,
+    * so the writes overlap even when the pool is small or busy. The
+    * background write settles before this returns OR throws — an orphaned
+    * in-flight job racing a replayed overwrite of the same batch dir is the
+    * shared-_temporary committer collision — and its failure is rethrown
+    * once the foreground succeeded. */
+  def overlapWrites[A](background: => Unit)(foreground: => A): A = {
+    import scala.concurrent.{Await, Future, blocking}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val bg = Future(blocking(background))
+    val out = try foreground finally Await.ready(bg, Duration.Inf)
+    Await.result(bg, Duration.Inf)
+    out
+  }
+
   def batchIdOf(p: Path): Long =
     p.getFileName.toString.stripPrefix("batch=").toLong
 

@@ -33,7 +33,7 @@ object CurationOps {
     OpQuery("q44_curation_pipeline",
       (s, d) => {
         graft.functions.Hash60.register(s)
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q44"
+        val root = Gate.workDir("q44")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         // 1. quality gate (q14's score, kept docs only)
         val quality = ld(s, d, "documents")
@@ -102,8 +102,8 @@ object CurationOps {
         .orderBy("doc_id"),
       Some(s"""SELECT doc_id, n_tok, start_tok, start_tok // 512 AS chunk_id FROM (
           SELECT doc_id, n_tok,
-            COALESCE(sum(n_tok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start_tok
+            CAST(COALESCE(sum(n_tok) OVER (ORDER BY doc_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_tok
           FROM (SELECT doc_id, len($wordsDuck) AS n_tok FROM documents) t) u
         ORDER BY doc_id""")),
 

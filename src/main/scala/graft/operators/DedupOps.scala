@@ -185,29 +185,20 @@ object DedupOps {
     /** Append one batch's `signatures`-shaped frame (idempotent per batchId).
       * The two sides (rows/dkey, bands/bkey) are independent dynamic-
       * partition writes whose wall is committer/small-file dominated at
-      * micro-batch sizes, so they run CONCURRENTLY (guide §2.6 overlap of
-      * independent jobs — distinct target dirs, so no committer staging
-      * collision). */
-    def append(sigs: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val rowsF = Future {
+      * micro-batch sizes, so they run CONCURRENTLY
+      * ([[BatchStore.overlapWrites]]). */
+    def append(sigs: org.apache.spark.sql.DataFrame, batchId: Long): Unit =
+      BatchStore.overlapWrites {
         sigs.withColumn("dkey", docKeyCol(col("doc_id")))
           .repartition(col("dkey")) // one file per dkey, parallel write (§6)
           .write.partitionBy("dkey").mode("overwrite")
           .parquet(s"$rowsDir/batch=$batchId")
+      } {
+        bands(sigs).withColumn("bkey", bandKeyCol)
+          .repartition(col("bkey"))
+          .write.partitionBy("bkey").mode("overwrite")
+          .parquet(s"$bandsDir/batch=$batchId")
       }
-      // settle the background write before returning OR throwing — an
-      // orphaned in-flight job racing a replayed overwrite of the same
-      // batch dir is the shared-_temporary committer collision
-      try bands(sigs).withColumn("bkey", bandKeyCol)
-        .repartition(col("bkey"))
-        .write.partitionBy("bkey").mode("overwrite")
-        .parquet(s"$bandsDir/batch=$batchId")
-      finally Await.ready(rowsF, Duration.Inf)
-      Await.result(rowsF, Duration.Inf) // propagate a rows-side failure too
-    }
 
     /** Full signature rows (verify side), unpruned (but live-batch-only —
       * batch-dir liveness, pruning, and the crash-safe compaction swap are
@@ -637,7 +628,7 @@ object DedupOps {
       // corpus nears the 50-doc cap, so the documented cap-crossing
       // divergence cannot trigger; verified max bucket = 3 at sf0.01.)
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q40"
+        val root = Gate.workDir("q40")
         graft.streaming.DedupStream
           .mineCorpusInChunks(s, ld(s, d, "documents"), root, chunks = 4)
           .orderBy("a", "b")

@@ -112,7 +112,7 @@ object JoinOps {
     * presentation-only range exchange). Writes both sides bucketed, then
     * joins them through the catalog so the scan carries the bucket spec. */
   def bucketedSmbJoin(s: SparkSession, d: String): DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-q100"
+    val root = Gate.workDir("q100")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val ev = ld(s, d, "events").filter(col("value").isNotNull)
     def half(par: Int, cnt: String, sm: String) = ev
@@ -180,7 +180,7 @@ object JoinOps {
     // dim state all break row counts or values.
     OpQuery("q63_stream_enrich",
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q63"
+        val root = Gate.workDir("q63")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val streamDir = s"$root/stream"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
         val ev = ld(s, d, "events").select(
@@ -255,7 +255,7 @@ object JoinOps {
     // matchable row all break equality.
     OpQuery("q77_stream_stream_join",
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q77"
+        val root = Gate.workDir("q77")
         val ev = ld(s, d, "events")
         val left = ev.filter(pmod(col("event_id"), lit(2)) === 0).select(
           col("user_id"), col("event_id").as("l_event_id"),
@@ -322,7 +322,7 @@ object JoinOps {
     // admissible) or a lost/duplicated emission breaks oracle equality.
     OpQuery("q145_stream_left_outer_join",
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q145"
+        val root = Gate.workDir("q145")
         val ev = ld(s, d, "events")
         val left = ev.filter(col("event_type") === "view").select(
           col("user_id"), col("event_id").as("l_event_id"),

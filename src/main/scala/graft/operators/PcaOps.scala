@@ -197,9 +197,6 @@ object PcaOps {
         (expr("aggregate(zip_with(va, vb, (x, y) -> CAST(x AS DOUBLE) * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
           - col("bias")).as("proj"))
 
-  private def workRoot(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-$tag"
-
   val queries: Seq[OpQuery] = Seq(
 
     OpQuery("q201_pca_project",
@@ -212,7 +209,7 @@ object PcaOps {
       // a lost sign convention, a wrong bias, or a reassociated sum all
       // hash-diverge.
       (s, d) => {
-        val root = workRoot("q201")
+        val root = Gate.workDir("q201")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val e = ld(s, d, "embeddings")
         val m = trainPca(s, e, nComp = 4)
@@ -227,7 +224,7 @@ object PcaOps {
           list_reduce(list_transform(list_zip(e.embedding, m.cv),
             p -> CAST(p[1] AS DOUBLE) * p[2]), (a, b) -> a + b) - m.bias AS proj
         FROM embeddings e
-        CROSS JOIN parquet_scan('${workRoot("q201")}/comps/*.parquet') m
+        CROSS JOIN parquet_scan('${Gate.workDir("q201")}/comps/*.parquet') m
         ORDER BY e.vec_id, m.c"""))
   ,
 
@@ -249,7 +246,7 @@ object PcaOps {
       // fixed-order double arithmetic shared with DuckDB.
       (s, d) => {
         val clock = new CdcQueries.PhaseClock("q204")
-        val root = workRoot("q204")
+        val root = Gate.workDir("q204")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val e = ld(s, d, "embeddings")
         val m = 16
@@ -306,7 +303,7 @@ object PcaOps {
       .map(c => s"MAX(CASE WHEN c = $c THEN proj END) AS p$c").mkString(", ")
     val dist2 = (0 until m)
       .map(c => s"(q.p$c - p.p$c) * (q.p$c - p.p$c)").mkString(" + ")
-    s"""WITH mm AS (SELECT c, cv, bias FROM parquet_scan('${workRoot(tag)}/comps/*.parquet')),
+    s"""WITH mm AS (SELECT c, cv, bias FROM parquet_scan('${Gate.workDir(tag)}/comps/*.parquet')),
       pl AS (SELECT e.vec_id, mm.c,
           list_reduce(list_transform(list_zip(e.embedding, mm.cv),
             p -> CAST(p[1] AS DOUBLE) * p[2]), (a, b) -> a + b) - mm.bias AS proj

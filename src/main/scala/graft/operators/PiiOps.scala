@@ -109,7 +109,7 @@ object PiiOps {
       (s, d) => {
         import graft.lake.CryptoShred
         val clock = new CdcQueries.PhaseClock("q189")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q189"
+        val root = Gate.workDir("q189")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val ev = ld(s, d, "events")
           .select(col("event_id"), col("user_id"), col("props"))

@@ -327,7 +327,7 @@ object Relational {
       Some("""SELECT event_type,
           CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS kb,
           count(*) AS n,
-          sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS sum_k,
+          CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
           min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
           max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
         FROM events GROUP BY 1, 2 ORDER BY event_type, kb"""))

@@ -184,7 +184,7 @@ object SamplingOps {
           FROM documents GROUP BY source),
         wts AS (SELECT source, tokens,
             CAST(floor(sqrt(CAST(tokens AS DOUBLE))) AS BIGINT) AS w FROM toks),
-        tot AS (SELECT sum(w) AS tw FROM wts),
+        tot AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM wts),
         q AS (SELECT source, tokens, w,
             (1000000 * w) // tw AS quota, (1000000 * w) % tw AS rem
           FROM wts, tot),
@@ -266,7 +266,7 @@ object SamplingOps {
           FROM documents GROUP BY source),
         wts AS (SELECT source, tokens,
             CAST(floor(sqrt(CAST(tokens AS DOUBLE))) AS BIGINT) AS w FROM toks),
-        tot AS (SELECT sum(w) AS tw FROM wts),
+        tot AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM wts),
         q AS (SELECT source, tokens, w,
             (8000 * w) // tw AS quota, (8000 * w) % tw AS rem
           FROM wts, tot),
@@ -278,9 +278,9 @@ object SamplingOps {
             CAST(len(${TextOps.wordsDuck}) AS BIGINT) AS n_tok,
             CAST('0x' || substr(md5('mx:' || doc_id), 1, 15) AS BIGINT) AS h
           FROM documents),
-        c AS (SELECT *, COALESCE(SUM(n_tok) OVER (PARTITION BY source
+        c AS (SELECT *, CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source
             ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            AS cum_before FROM d2)
+            AS BIGINT) AS cum_before FROM d2)
         SELECT c.source, doc_id, n_tok, cum_before
         FROM c JOIN alloc a ON c.source = a.source
         WHERE cum_before < a.alloc ORDER BY c.source, doc_id"""))

@@ -148,10 +148,10 @@ object SemDedup {
     * qualifying lower ids. `newFilter` restricts the JUDGED side (the
     * incremental gate judges only the appended wave; lower-id candidates
     * stay unrestricted). */
-  private def semdedupOracleSql(root: String, newFilter: String = "TRUE"): String = {
+  private def semdedupOracleSql(tag: String, newFilter: String = "TRUE"): String = {
     val duckCos = SimilarityOps.duckCosSql
     s"""WITH cents AS (
-          SELECT cid, cv FROM parquet_scan('${System.getProperty("java.io.tmpdir")}/$root/cents/*.parquet')),
+          SELECT cid, cv FROM parquet_scan('${Gate.workDir(tag)}/cents/*.parquet')),
         asg AS (
           SELECT vec_id, embedding, cid,
             row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn
@@ -184,7 +184,7 @@ object SemDedup {
       // build amortize across every downstream consumer of the index.
       (s, d) => {
         val clock = new CdcQueries.PhaseClock("q188")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q188"
+        val root = Gate.workDir("q188")
         val e = ld(s, d, "embeddings")
         val cents = clock("train") {
           SimilarityOps.trainCentroids(s, e, k = 16, iters = 5)
@@ -197,7 +197,7 @@ object SemDedup {
           "gate is vacuous unless the corpus holds same-cell semantic dups")
         out.orderBy("vec_id")
       },
-      Some(semdedupOracleSql("graft-q188"))),
+      Some(semdedupOracleSql("q188"))),
 
     OpQuery("q192_semantic_dedup_incremental",
       // INCREMENTAL SemDeDup under the hard gate — the ingest-time shape:
@@ -210,7 +210,7 @@ object SemDedup {
       // derives from the dumped wave-1 centroids over the FULL corpus.
       (s, d) => {
         val clock = new CdcQueries.PhaseClock("q192")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q192"
+        val root = Gate.workDir("q192")
         val e = ld(s, d, "embeddings")
         val wave1 = e.filter(col("vec_id") < 300)
         val wave2 = e.filter(col("vec_id") >= 300)
@@ -228,5 +228,5 @@ object SemDedup {
           "gate is vacuous unless the new wave holds same-cell dups")
         out.orderBy("vec_id")
       },
-      Some(semdedupOracleSql("graft-q192", newFilter = "c.vec_id >= 300"))))
+      Some(semdedupOracleSql("q192", newFilter = "c.vec_id >= 300"))))
 }

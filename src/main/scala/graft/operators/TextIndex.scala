@@ -61,10 +61,9 @@ object TextIndex {
       // postings and doclens target distinct dirs and share no state —
       // overlap the two committer-dominated writes (guide §2.6), same
       // pattern as DedupOps.SigStore.append
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val postF = Future {
+      val lens = docs.select(col("doc_id"),
+        size(expr(TextOps.wordsSpark)).cast("long").as("len"))
+      BatchStore.overlapWrites {
         // cluster by the partition column before the dynamic-partition
         // write: the upstream groupBy hash-partitions by (doc_id, token),
         // so every task would otherwise write a sliver file into every
@@ -75,15 +74,7 @@ object TextIndex {
           .repartition(col("tbucket"))
           .write.partitionBy("tbucket").mode("overwrite")
           .parquet(s"$postingsDir/batch=$batchId")
-      }
-      val lens = docs.select(col("doc_id"),
-        size(expr(TextOps.wordsSpark)).cast("long").as("len"))
-      // the background write must SETTLE before append returns or throws:
-      // an orphaned in-flight job racing a checkpoint-replayed overwrite of
-      // the same batch dir is the shared-_temporary committer collision
-      try writeDoclens(lens, s"$doclensDir/batch=$batchId")
-      finally Await.ready(postF, Duration.Inf)
-      Await.result(postF, Duration.Inf) // propagate a postings failure too
+      }(writeDoclens(lens, s"$doclensDir/batch=$batchId"))
     }
 
     /** Write one doclens segment + its `_STATS` (underscore-prefixed:
@@ -602,23 +593,19 @@ object TextIndex {
       // O(the epoch's feed), never O(corpus) — the same incremental shape
       // as the MERGE it mirrors.
       (s, _) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q142"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        val logDir = s"$root/log"
-        val tableDir = s"$root/table"
-        graft.cdc.LogGen.writeLog(s, graft.cdc.LogGen.Params(nEvents = 4000,
-          nRepos = 40, pathsPerRepo = 30, v1Fraction = 0.7), logDir, epochs = 3)
-        CdcQueries.dumpDecodedByEpoch(s, logDir, root, epochs = 3)
-        graft.cdc.Replay.replayLog(s, logDir, tableDir, buckets = 8)
+        val g = Gate(s, "q142")
+        g.genLog(4000, epochs = 3)
+        g.dumpDecoded(epochs = 3)
+        graft.cdc.Replay.replayLog(s, g.log, g.table, buckets = 8)
         def asDocs(df: DataFrame): DataFrame =
           df.select(xxhash64(col("repo"), col("path")).as("doc_id"),
             col("content").as("text"))
-        val idx = create(s"$root/idx", buckets = 32)
+        val idx = create(s"${g.root}/idx", buckets = 32)
         // initial build from the snapshot after epoch 0 (v0 is the create)
         idx.append(asDocs(graft.lake.IceLite.read(s,
-          graft.lake.IceLite.loadVersion(tableDir, 1))), batchId = 1L)
+          graft.lake.IceLite.loadVersion(g.table, 1))), batchId = 1L)
         (2 to 3).foreach { v =>
-          val feed = graft.lake.IceLite.changes(s, tableDir, v - 1, v)
+          val feed = graft.lake.IceLite.changes(s, g.table, v - 1, v)
           idx.delete(feed.select(
             xxhash64(col("repo"), col("path")).as("doc_id")), batchId = 100L * v)
           idx.append(asDocs(feed.filter(
@@ -638,7 +625,7 @@ object TextIndex {
           "compaction must collapse the synced batches")
         require(res() == before,
           "post-compaction search must equal the tombstone view")
-        val finalState = graft.lake.IceLite.read(s, graft.lake.IceLite.load(tableDir))
+        val finalState = graft.lake.IceLite.read(s, graft.lake.IceLite.load(g.table))
         val liveKeys = finalState.count()
         val revRows = s.read.option("basePath", idx.postingsDir)
           .parquet(BatchStore.liveBatchDirs(idx.postingsDir).map(_.toString): _*)
@@ -655,7 +642,7 @@ object TextIndex {
       Some(s"""WITH state AS (
           SELECT repo, path, content FROM (
             SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY seq DESC) AS rn
-            FROM parquet_scan('${System.getProperty("java.io.tmpdir")}/graft-q142/decoded/*.parquet')) t
+            FROM parquet_scan('${Gate.workDir("q142")}/decoded/*.parquet')) t
           WHERE rn = 1 AND op <> 'DELETE'),
         tf AS (
           SELECT repo, path, token, count(*) AS tf FROM (
