@@ -23,7 +23,7 @@ import graft.lake.{IceLite, Merge}
   *
   * The health check is a routes-only decode pass (no shuffle, payloads
   * never leave the scan); the merge pass runs only for healthy epochs.
-  * At scale the check can ride the merge's Observation instead of a
+  * At scale the check can ride the merge's route counter instead of a
   * second pass — kept separate here because refusal must happen before
   * any file is staged. */
 object Breaker {

@@ -34,23 +34,23 @@ object Replay {
   final case class DecodedBatch(
       updates: DataFrame,
       /** Persist this batch's dead letters; call after the merge with
-        * whether it applied. An applied merge carried the non-success count
-        * on its Observation. A FENCED merge never consumed `updates`, so
-        * that metric never materializes (waiting on it would block
-        * forever): the count pays one direct decode pass instead. A crashed
-        * prior attempt may already have flushed; the write dedups by event
-        * identity, and a crash between its commit and its flush can no
-        * longer LOSE letters. Returns the non-success row count. */
+        * whether it applied. An applied merge counted the non-success rows
+        * on `routeStats` during its own action. A FENCED merge never
+        * consumed `updates`, so the counter stays empty: the count pays one
+        * direct decode pass instead. A crashed prior attempt may already
+        * have flushed; the write dedups by event identity, and a crash
+        * between its commit and its flush can no longer LOSE letters.
+        * Returns the non-success row count. */
       flushDeadLetters: Boolean => Long,
       routeStats: RouteStatsAccumulator)
 
   /** Decode one epoch's events and shape them for the MERGE: data columns
     * (with field-ID metadata) + seq + op.
     *
-    * Dead letters cost ZERO extra decode passes in the happy path: an
-    * Observation on the decode output counts non-success rows during the
-    * merge's own action; only when that count is > 0 does the flush
-    * re-run decode to persist the dead letters. */
+    * Dead letters cost ZERO extra decode passes in the happy path: the
+    * route counter on the decode (the one lineage reads) counts non-success
+    * rows during the merge's own action; only when that count is > 0 does
+    * the flush re-run decode to persist the dead letters. */
   def decodeForMerge(
       events: Dataset[ChangeEvent],
       registry: Broadcast[DescriptorRegistry],
@@ -61,10 +61,8 @@ object Replay {
     val acc = new RouteStatsAccumulator
     events.sparkSession.sparkContext.register(acc, "graft.decode.routeStats")
     def decodeAll() = Decode.decode(events, registry, defaultKey, Cdc.MessageType, framing)
-    val obs = org.apache.spark.sql.Observation()
     val decoded = Decode.decode(events, registry, defaultKey, Cdc.MessageType, framing,
-      stats = Some(acc)).observe(obs,
-      sum(when(col("route") =!= "success", 1L).otherwise(0L)).as("bad"))
+      stats = Some(acc))
 
     def writeLetters(dld: String): Unit = {
       // SELF-CONTAINED store: the schema refs ride along with the kept
@@ -77,13 +75,9 @@ object Replay {
           Seq("partition", "offset")))
     }
     val flushDeadLetters: Boolean => Long = merged => {
-      // When a batch yields ZERO update rows (all events dead-lettered),
-      // AQE's empty-relation propagation eliminates the observed branch and
-      // the metric goes missing — in that rare case count dead letters
-      // directly rather than silently dropping them.
-      val observed =
-        if (merged) obs.get.get("bad").collect { case l: Long => l } else None
-      val bad = observed.getOrElse(Decode.deadLetter(decodeAll()).count())
+      val bad =
+        if (merged) (acc.byRoute - graft.decode.Route.Success).values.sum
+        else Decode.deadLetter(decodeAll()).count()
       if (bad > 0L) deadLetterDir.foreach(writeLetters)
       bad
     }

@@ -182,63 +182,17 @@ object Compaction {
     val rowsBefore = preObs.get("rows").asInstanceOf[Long]
 
     // compaction output is pure BASE state (no __origin dirs → origin 0 from
-    // the scan, overridden: these are not change rows)
-    val scanned = IceLite.scanEpochFiles(epochDir, base.currentSchemaVersion, base.keyCols)
-    val blooms = KeyBloom.forEpoch(spark, scanned.map(_._1), base.keyCols)
-    // clustered files record their [min, max] of every cluster/z-order
-    // column — one narrow job over just those columns; an all-NULL file
-    // keeps no bounds for that column (never pruned, sound)
-    val statCols: Seq[String] = clusterBy.map(Seq(_)).getOrElse(zorderBy)
-    val boundStats: Map[String, Map[String, (String, String)]] =
-      if (statCols.isEmpty || scanned.isEmpty) Map.empty
-      else {
-        def normalize(uri: String): String =
-          try new java.net.URI(uri).getPath match { case null => uri; case p => p }
-          catch { case _: Exception => uri.stripPrefix("file:") }
-        val aggs = statCols.flatMap(c => Seq(
-          min(col(c)).cast("string").as(s"mn_$c"), max(col(c)).cast("string").as(s"mx_$c")))
-        spark.read.parquet(scanned.map(_._1.path): _*)
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val bounds = statCols.zipWithIndex.flatMap { case (c, i) =>
-              val mn = r.getString(1 + 2 * i); val mx = r.getString(2 + 2 * i)
-              if (mn == null || mx == null) None else Some(c -> (mn, mx))
-            }.toMap
-            normalize(r.getString(0)) -> bounds
-          }.toMap
-      }
-    val newFiles = scanned.map { case (f, _) =>
-      val g = f.copy(delta = false, bloom = blooms.get(f.path))
-      boundStats.get(f.path) match {
-        case Some(bounds) if bounds.nonEmpty =>
-          if (clusterBy.isDefined)
-            g.copy(sortCol = clusterBy,
-              sortMin = bounds.get(clusterBy.get).map(_._1),
-              sortMax = bounds.get(clusterBy.get).map(_._2))
-          // MERGE with the footer-recorded bounds (measured wins for the
-          // z-order dims) — other columns keep their stats-time bounds
-          else g.copy(colBounds = g.colBounds ++ bounds)
-        case _ => g
-      }
-    }
-    // secondary bloom index: a compaction rewrites the chosen buckets' FULL
-    // state, so their value blooms are REPLACED from the output — this is
-    // where deleted values finally shed from the index (the OR path on
-    // append epochs can only grow it). Chosen buckets with no surviving
-    // rows get an empty bloom, not a stale one.
-    val valueRep =
-      if (base.indexedCols.isEmpty) Map.empty[String, Map[Int, Array[Byte]]]
-      else {
-        val computed = KeyBloom.valueBloomsForEpoch(spark, newFiles,
-          base.indexedCols.toSeq.sorted)
-        base.indexedCols.toSeq.sorted.map { c =>
-          val byBucket = computed.getOrElse(c, Map.empty)
-          c -> chosen.map(b => b -> byBucket.getOrElse(b,
-            new Array[Byte](KeyBloom.FixedBits >>> 3))).toMap
-        }.toMap
-      }
+    // the scan, overridden: these are not change rows). Clustered files
+    // record their measured [min, max] of every cluster/z-order column.
+    // A compaction rewrites the chosen buckets' FULL state, so their value
+    // blooms are REPLACED from the output — this is where deleted values
+    // finally shed from the index (the OR path on append epochs can only
+    // grow it); chosen buckets with no surviving rows get an empty bloom.
+    val indexed = base.indexedCols.toSeq.sorted
+    val (scanned, valueBlooms) = KeyBloom.describe(spark, epochDir, base.currentSchemaVersion,
+      base.keyCols, indexed, clusterBy.map(Seq(_)).getOrElse(zorderBy))
+    val newFiles = scanned.map { case (f, _) => f.copy(delta = false) }
+    val valueRep = KeyBloom.withEmptyBuckets(valueBlooms, indexed, chosen)
     // touches exactly the chosen buckets — any concurrent commit on them
     // conflicts loudly (IceLite.commit) instead of losing files
     IceLite.commit(dir, base, IceLite.CommitDelta(
@@ -306,15 +260,11 @@ object Compaction {
     val rowsAfter = obs.get("rows").asInstanceOf[Long]
     val rowsBefore = preObs.get("rows").asInstanceOf[Long]
 
-    val scanned2 = IceLite.scanEpochFiles(epochDir, base.currentSchemaVersion, base.keyCols)
-    val blooms2 = KeyBloom.forEpoch(spark, scanned2.map(_._1), base.keyCols)
-    val newFiles = scanned2
-      .map { case (f, _) => f.copy(delta = false, bloom = blooms2.get(f.path)) }
     // the value index is recomputed under the NEW bucket numbering
-    val newValueIndex =
-      if (base.indexedCols.isEmpty) Map.empty[String, Map[Int, Array[Byte]]]
-      else KeyBloom.valueBloomsForEpoch(spark, newFiles, base.indexedCols.toSeq.sorted)
-    IceLite.commitRebucket(dir, base, epochId, newBuckets, newFiles, newValueIndex)
+    val (scanned, newValueIndex) = KeyBloom.describe(spark, epochDir, base.currentSchemaVersion,
+      base.keyCols, base.indexedCols.toSeq.sorted)
+    IceLite.commitRebucket(dir, base, epochId, newBuckets,
+      scanned.map { case (f, _) => f.copy(delta = false) }, newValueIndex)
     CompactionStats(newBuckets, rowsBefore, rowsAfter, base.files.size)
   }
 

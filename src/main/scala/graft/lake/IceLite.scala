@@ -95,9 +95,9 @@ object IceLite {
       sortCol: Option[String] = None,
       sortMin: Option[String] = None,
       sortMax: Option[String] = None,
-      /** Per-column [min, max] bounds. Two writers: (a) z-order/cluster
+      /** Per-column [min, max] bounds. Two writers: (a) z-order
         * compactions record MEASURED bounds for their clustering dimensions
-        * (one narrow job post-write); (b) since the metadata-aggregate
+        * ([[KeyBloom.describe]], post-write); (b) since the metadata-aggregate
         * round, [[IceLite.scanEpochFiles]] records FOOTER bounds for every
         * stats-friendly primitive column (untruncatable numerics + UTF-8
         * strings whose footer encoding matches the prune comparator) on
@@ -1036,8 +1036,8 @@ object IceLite {
   }
 
   /** CREATE INDEX: add a per-bucket value-bloom index on a non-key data
-    * column, BACKFILLED from the current resolved state in one narrow job
-    * (bucket column + value hash, per-bucket bloom build). Every later
+    * column, BACKFILLED from the current resolved state in one aggregate
+    * grouped by bucket ([[KeyBloom.valueBloom]]). Every later
     * commit keeps the index fresh: append epochs OR their batch values in,
     * compaction/rebucket replace from the rewritten state. [[readWhere]]
     * then prunes whole buckets for equality predicates — at 10^5 buckets
@@ -1055,19 +1055,13 @@ object IceLite {
     require(Seq(StringType, LongType, IntegerType, ShortType, BooleanType)
         .contains(target.sparkType),
       s"bloom index needs a host-hashable type, got ${target.sparkType} for $colName")
-    import spark.implicits._
     val built = read(spark, base)
-      .select(bucketExpr(base.keyCols, base.buckets).as("__b"),
-        xxhash64(col(colName)).as("__h"))
-      .as[(Int, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (b, it) => (b, KeyBloom.buildFixed(it.map(_._2))) }
-      .collect().toMap
-    // buckets with NO live rows get an explicit empty bloom — a missing
-    // entry means "may contain" (sound but useless), an empty one means
-    // "contains nothing" (provable here: the resolved state has no rows)
-    val full = (0 until base.buckets).map(b =>
-      b -> built.getOrElse(b, new Array[Byte](KeyBloom.FixedBits >>> 3))).toMap
+      .groupBy(bucketExpr(base.keyCols, base.buckets).as("__b"))
+      .agg(KeyBloom.valueBloom(col(colName)))
+      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+    // buckets with NO live rows get an explicit empty bloom (provable
+    // here: the resolved state has no rows there)
+    val full = KeyBloom.withEmptyBuckets(Map(colName -> built), Seq(colName), 0 until base.buckets)
     // the field id is PINNED alongside: a descriptor-driven rename would
     // orphan the index's name key — with the pin, only renameColumn (which
     // re-keys the index) can change it
@@ -1078,7 +1072,7 @@ object IceLite {
     // Refuse instead; the caller re-runs against the fresh snapshot.
     commit(dir, base, CommitDelta(epochId, Set.empty, Vector.empty,
       base.currentSchema, pinIds = Set(target.id), indexCols = Set(colName),
-      valueBloomReplace = Map(colName -> full),
+      valueBloomReplace = full,
       requireBaseVersion = Some(base.version)))
   }
 
@@ -1462,9 +1456,6 @@ object IceLite {
       live.drop(hidden: _*)
     }
   }
-
-  def readBuckets(spark: SparkSession, snap: Snapshot, buckets: Set[Int]): DataFrame =
-    read(spark, snap, f => buckets.contains(f.bucket))
 
   /** Incremental CHANGE FEED between two committed snapshot versions: every
     * change row applied after `fromVersion`, up to and including

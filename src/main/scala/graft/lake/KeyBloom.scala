@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Per-file key Bloom filters, carried in the snapshot manifest.
@@ -28,10 +29,13 @@ import org.apache.spark.sql.functions._
   * Absence of a bloom always means "may contain" (old manifests keep
   * working; the field is additive).
   *
-  * Build cost: one narrow Spark job per commit over the just-written
-  * epoch's eligible files (key columns only — a columnar projection of
-  * the batch), shuffling 8 bytes/row grouped by file. Skipped entirely
-  * when no file is under the cap (e.g. the bulk-replay bench epochs).
+  * Build cost: [[describe]] measures a just-written epoch dir in ONE
+  * aggregate grouped by file, after the write — key blooms, per-bucket
+  * value blooms and cluster bounds together. The blooms are partial
+  * aggregates (each task ships one bit array per file it read, never a
+  * row), over only the columns they hash. No job runs when nothing needs
+  * measuring (e.g. the bulk-replay bench epochs, every file over the
+  * cap, no value index).
   */
 object KeyBloom {
   /** Files above this row count carry no bloom (bits would exceed
@@ -60,39 +64,42 @@ object KeyBloom {
 
   def sizeBits(rows: Long): Int = nextPow2(rows * BitsPerKey)
 
+  /** Set the `k` probe bits of `keyHash` in the `m`-bit array `bits`. */
+  private def set(bits: Array[Byte], m: Int, k: Int, keyHash: Long): Unit = {
+    val h1 = graft.functions.XxHash64Host.hashLong(keyHash, Seed1)
+    val h2 = graft.functions.XxHash64Host.hashLong(keyHash, Seed2) | 1L
+    var j = 0
+    while (j < k) {
+      val pos = (((h1 + j * h2) % m + m) % m).toInt
+      bits(pos >>> 3) = (bits(pos >>> 3) | (1 << (pos & 7))).toByte
+      j += 1
+    }
+  }
+
+  private def probe(bits: Array[Byte], m: Int, k: Int, keyHash: Long): Boolean = {
+    val h1 = graft.functions.XxHash64Host.hashLong(keyHash, Seed1)
+    val h2 = graft.functions.XxHash64Host.hashLong(keyHash, Seed2) | 1L
+    var j = 0
+    while (j < k) {
+      val pos = (((h1 + j * h2) % m + m) % m).toInt
+      if ((bits(pos >>> 3) & (1 << (pos & 7))) == 0) return false
+      j += 1
+    }
+    true
+  }
+
   def build(hashes: Array[Long]): Array[Byte] = {
     val m = sizeBits(hashes.length.toLong)
     val bits = new Array[Byte](m >>> 3)
-    var i = 0
-    while (i < hashes.length) {
-      val h1 = graft.functions.XxHash64Host.hashLong(hashes(i), Seed1)
-      val h2 = graft.functions.XxHash64Host.hashLong(hashes(i), Seed2) | 1L
-      var j = 0
-      while (j < K) {
-        val pos = (((h1 + j * h2) % m + m) % m).toInt
-        bits(pos >>> 3) = (bits(pos >>> 3) | (1 << (pos & 7))).toByte
-        j += 1
-      }
-      i += 1
-    }
+    hashes.foreach(set(bits, m, K, _))
     bits
   }
 
   /** No false negatives by construction; `bloom` length is the m/8 the
     * builder chose (m is recovered from it, so the manifest needs no
     * extra sizing field). */
-  def mayContain(bloom: Array[Byte], keyHash: Long): Boolean = {
-    val m = bloom.length << 3
-    val h1 = graft.functions.XxHash64Host.hashLong(keyHash, Seed1)
-    val h2 = graft.functions.XxHash64Host.hashLong(keyHash, Seed2) | 1L
-    var j = 0
-    while (j < K) {
-      val pos = (((h1 + j * h2) % m + m) % m).toInt
-      if ((bloom(pos >>> 3) & (1 << (pos & 7))) == 0) return false
-      j += 1
-    }
-    true
-  }
+  def mayContain(bloom: Array[Byte], keyHash: Long): Boolean =
+    probe(bloom, bloom.length << 3, K, keyHash)
 
   // ---------------------------------------------------------------------
   // Fixed-size per-BUCKET value blooms (the secondary bloom index).
@@ -114,32 +121,12 @@ object KeyBloom {
 
   def buildFixed(hashes: Iterator[Long]): Array[Byte] = {
     val bits = new Array[Byte](FixedBits >>> 3)
-    hashes.foreach(h => setFixed(bits, h))
+    hashes.foreach(set(bits, FixedBits, KFixed, _))
     bits
   }
 
-  private def setFixed(bits: Array[Byte], keyHash: Long): Unit = {
-    val h1 = graft.functions.XxHash64Host.hashLong(keyHash, Seed1)
-    val h2 = graft.functions.XxHash64Host.hashLong(keyHash, Seed2) | 1L
-    var j = 0
-    while (j < KFixed) {
-      val pos = (((h1 + j * h2) % FixedBits + FixedBits) % FixedBits).toInt
-      bits(pos >>> 3) = (bits(pos >>> 3) | (1 << (pos & 7))).toByte
-      j += 1
-    }
-  }
-
-  def mayContainFixed(bloom: Array[Byte], keyHash: Long): Boolean = {
-    val h1 = graft.functions.XxHash64Host.hashLong(keyHash, Seed1)
-    val h2 = graft.functions.XxHash64Host.hashLong(keyHash, Seed2) | 1L
-    var j = 0
-    while (j < KFixed) {
-      val pos = (((h1 + j * h2) % FixedBits + FixedBits) % FixedBits).toInt
-      if ((bloom(pos >>> 3) & (1 << (pos & 7))) == 0) return false
-      j += 1
-    }
-    true
-  }
+  def mayContainFixed(bloom: Array[Byte], keyHash: Long): Boolean =
+    probe(bloom, FixedBits, KFixed, keyHash)
 
   def orMerge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     require(a.length == b.length, "bloom size mismatch")
@@ -149,61 +136,125 @@ object KeyBloom {
     out
   }
 
-  /** Per-bucket value blooms for `cols` over a freshly-written epoch's
-    * files: ONE narrow job reading only the indexed columns, grouped by
-    * bucket (derived from each row's file). NULL values hash to the seed
-    * and contribute nothing meaningful — a NULL-equality probe is not a
-    * bloom workload. Returns col → bucket → bloom. */
-  def valueBloomsForEpoch(spark: SparkSession, files: Seq[IceLite.DataFile],
-      cols: Seq[String]): Map[String, Map[Int, Array[Byte]]] = {
-    if (cols.isEmpty || files.isEmpty) return Map.empty
-    import spark.implicits._
-    def normalize(uri: String): String =
-      try new java.net.URI(uri).getPath match { case null => uri; case p => p }
-      catch { case _: Exception => uri.stripPrefix("file:") }
-    val bucketByPath = files.map(f => f.path -> f.bucket).toMap
-    val bcast = spark.sparkContext.broadcast(bucketByPath)
-    val built = spark.read.parquet(files.map(_.path): _*)
-      .select(input_file_name().as("__f") +:
-        cols.map(c => xxhash64(col(c)).as(s"__h_$c")): _*)
-      .map(r => (bcast.value(normalize(r.getString(0))),
-        Array.tabulate(cols.length)(i => r.getLong(i + 1))))
-      .groupByKey(_._1)
-      .flatMapGroups { (bucket, it) =>
-        val blooms = Array.fill(cols.length)(new Array[Byte](FixedBits >>> 3))
-        it.foreach { case (_, hs) =>
-          var i = 0
-          while (i < hs.length) { setFixed(blooms(i), hs(i)); i += 1 }
-        }
-        blooms.iterator.zipWithIndex.map { case (b, i) => (bucket, i, b) }
-      }
-      .collect()
-    cols.zipWithIndex.map { case (c, i) =>
-      c -> built.collect { case (b, ci, bloom) if ci == i => b -> bloom }.toMap
+  /** `blooms` over exactly `buckets` for every column of `cols`: a bucket
+    * with no measured rows gets an EMPTY bloom. For full-state rewrites
+    * (compaction, repair, index backfill): an absent entry would mean
+    * "may contain" (sound but useless), an empty one means "contains
+    * nothing" — provable there, because the bucket's whole state was
+    * measured. */
+  def withEmptyBuckets(blooms: Map[String, Map[Int, Array[Byte]]], cols: Seq[String],
+      buckets: Iterable[Int]): Map[String, Map[Int, Array[Byte]]] =
+    cols.map { c =>
+      val byBucket = blooms.getOrElse(c, Map.empty)
+      c -> buckets.iterator.map(b =>
+        b -> byBucket.getOrElse(b, new Array[Byte](FixedBits >>> 3))).toMap
     }.toMap
+
+  /** Bloom bits of a group's (m, hash) rows: the buffer IS the m-bit array
+    * — reduce sets a row's bits, merge ORs partial arrays, so a file read
+    * by several tasks ships one array per task. m is constant within a
+    * group; rows with m = 0 contribute nothing (a group of only those
+    * yields an empty array). */
+  private final class BitsAgg(k: Int) extends Aggregator[(Int, Long), Array[Byte], Array[Byte]] {
+    def zero: Array[Byte] = Array.emptyByteArray
+    def reduce(b: Array[Byte], in: (Int, Long)): Array[Byte] =
+      if (in._1 == 0) b
+      else {
+        val bits = if (b.isEmpty) new Array[Byte](in._1 >>> 3) else b
+        set(bits, in._1, k, in._2)
+        bits
+      }
+    def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+      if (a.isEmpty) b else if (b.isEmpty) a else orMerge(a, b)
+    def finish(b: Array[Byte]): Array[Byte] = b
+    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] = Encoders.BINARY
+    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** Blooms for a freshly-written epoch's eligible files: ONE narrow job
-    * reading only the key columns of files under [[RowCap]], partial
-    * per-file grouping (a file is read by one task at delta sizes), a
-    * bloom-sized shuffle. Returns path → bloom bytes; files over the cap
-    * are absent. */
-  def forEpoch(spark: SparkSession, files: Seq[IceLite.DataFile],
-      keyCols: Seq[String]): Map[String, Array[Byte]] = {
-    val eligible = files.filter(f => f.rows > 0 && f.rows <= RowCap)
-    if (eligible.isEmpty) return Map.empty
-    import spark.implicits._
-    // input_file_name() is URI-shaped (file:/…, %-escaped); manifest paths
-    // are plain — normalize through java.net.URI for the join-back
-    def normalize(uri: String): String =
-      try new java.net.URI(uri).getPath match { case null => uri; case p => p }
-      catch { case _: Exception => uri.stripPrefix("file:") }
-    val built = spark.read.parquet(eligible.map(_.path): _*)
-      .select(input_file_name().as("__f"), keyHashColumn(keyCols).as("__h"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (f, it) => (f, build(it.map(_._2).toArray)) }
+  private def bitsAgg(k: Int)(m: Column, hash: Column): Column =
+    udaf(new BitsAgg(k), Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))(m, hash)
+
+  /** Aggregate: the fixed-size value bloom of `c`'s values. NULL hashes to
+    * the seed and contributes nothing meaningful — a NULL-equality probe
+    * is not a bloom workload. */
+  def valueBloom(c: Column): Column = bitsAgg(KFixed)(lit(FixedBits), xxhash64(c))
+
+  /** Measure a freshly written epoch dir: footer stats
+    * ([[IceLite.scanEpochFiles]]) plus, in AT MOST ONE Spark aggregate
+    * grouped by file —
+    *  - the key bloom of every file with 0 < rows ≤ [[RowCap]], sized from
+    *    its footer row count (the key hash is computed for those files
+    *    only);
+    *  - the fixed-size value bloom of every `indexedCols` column, per file,
+    *    OR-ed into the file's bucket here;
+    *  - the measured string [min, max] of every `boundCols` column. One
+    *    column is a clustering column (recorded as sortCol/sortMin/
+    *    sortMax); two or more are z-order dimensions (merged over the
+    *    footer colBounds). An all-NULL column records no bound.
+    * No job runs when no file is eligible and there is no index and no
+    * bound column. Returns the (file, origin) list with blooms and bounds
+    * filled in, and the value blooms as col → bucket → bloom (empty when
+    * nothing was read). */
+  def describe(spark: SparkSession, epochDir: String, schemaVersion: Int,
+      keyCols: Seq[String], indexedCols: Seq[String] = Nil,
+      boundCols: Seq[String] = Nil): (Vector[(IceLite.DataFile, Int)], Map[String, Map[Int, Array[Byte]]]) = {
+    val scanned = IceLite.scanEpochFiles(epochDir, schemaVersion, keyCols)
+    def keyed(f: IceLite.DataFile) = f.rows > 0 && f.rows <= RowCap
+    val eligible = scanned.map(_._1).filter(keyed)
+    val toRead =
+      if (indexedCols.isEmpty && boundCols.isEmpty) eligible else scanned.map(_._1)
+    if (toRead.isEmpty) return (scanned, Map.empty)
+
+    val df = spark.read.parquet(toRead.map(_.path): _*)
+    // input_file_name() yields the very URI strings inputFiles lists
+    // (file:/…, %-escaped); normalize maps each back to a manifest path
+    val byPath = toRead.map(f => f.path -> f).toMap
+    val fileOf: Map[String, IceLite.DataFile] = df.inputFiles.iterator
+      .flatMap(u => byPath.get(normalize(u)).map(u -> _)).toMap
+    // a value bloom missing a file's rows would prune a bucket that holds
+    // the value; a key bloom or bound just goes unrecorded
+    require(indexedCols.isEmpty || fileOf.size == toRead.size,
+      s"epoch files under $epochDir do not map back to their manifest paths")
+    // the row's file's bloom size, 0 for a file that gets no key bloom —
+    // one IN-set test per distinct size
+    val m = fileOf.toSeq.filter(x => keyed(x._2))
+      .groupMap(x => sizeBits(x._2.rows))(_._1)
+      .foldLeft(lit(0)) { case (acc, (bits, uris)) =>
+        when(col("__f").isin(uris: _*), bits).otherwise(acc)
+      }
+    val keyBloom = if (eligible.isEmpty) Nil
+      else Seq(bitsAgg(K)(col("__m"), when(col("__m") > 0, keyHashColumn(keyCols)).otherwise(0L)))
+    val aggs = keyBloom ++ indexedCols.map(c => valueBloom(col(c))) ++
+      boundCols.flatMap(c => Seq(min(col(c)).cast("string"), max(col(c)).cast("string")))
+    val measured = df.withColumn("__f", input_file_name()).withColumn("__m", m)
+      .groupBy("__f").agg(aggs.head, aggs.tail: _*)
       .collect()
-    built.map { case (f, b) => normalize(f) -> b }.toMap
+      .flatMap(r => fileOf.get(r.getString(0)).map(_ -> r))
+
+    val kb = keyBloom.size
+    val at = 1 + kb + indexedCols.size // first bound column
+    def filled(f: IceLite.DataFile, r: org.apache.spark.sql.Row): IceLite.DataFile = {
+      val g = if (kb == 0) f else f.copy(bloom = Option(r.getAs[Array[Byte]](1)).filter(_.nonEmpty))
+      val bounds = boundCols.zipWithIndex.flatMap { case (c, i) =>
+        val mn = r.getString(at + 2 * i); val mx = r.getString(at + 2 * i + 1)
+        if (mn == null || mx == null) None else Some(c -> (mn, mx))
+      }.toMap
+      bounds.toSeq match {
+        case Seq() => g
+        case Seq((c, (mn, mx))) if boundCols.size == 1 =>
+          g.copy(sortCol = Some(c), sortMin = Some(mn), sortMax = Some(mx))
+        case _ => g.copy(colBounds = g.colBounds ++ bounds)
+      }
+    }
+    val rowOf = measured.map { case (f, r) => f.path -> r }.toMap
+    val files = scanned.map { case (f, origin) => (rowOf.get(f.path).fold(f)(filled(f, _)), origin) }
+    val valueBlooms = indexedCols.zipWithIndex.map { case (c, i) =>
+      c -> measured.toSeq.groupMapReduce(_._1.bucket)(_._2.getAs[Array[Byte]](1 + kb + i))(orMerge)
+    }.toMap
+    (files, valueBlooms)
   }
+
+  private def normalize(uri: String): String =
+    try new java.net.URI(uri).getPath match { case null => uri; case p => p }
+    catch { case _: Exception => uri.stripPrefix("file:") }
 }

@@ -18,10 +18,13 @@ import IceLite._
   *    `deltaThreshold`. Amortized epoch cost is O(batch + batch×table/(B×K))
   *    — never the O(table × touched/total) full rewrite that kills 10^10-row
   *    tables; read amplification is bounded at K files/bucket;
-  *  - the ONLY wide shuffle per epoch is the merge exchange, keyed on
-  *    (bucket, key-hash shard) — task count scales with the cluster, not
-  *    the bucket count; AQE handles residual skew (buckets hash
+  *  - the ONLY row-volume shuffle per epoch is the merge exchange, keyed
+  *    on (bucket, key-hash shard) — task count scales with the cluster,
+  *    not the bucket count; AQE handles residual skew (buckets hash
   *    (repo, path), not repo, so hot repos don't produce hot buckets);
+  *  - the written files' metadata (key blooms, value blooms) is one
+  *    post-write aggregate ([[KeyBloom.describe]]) that shuffles one
+  *    partial bloom per file and task, never a row;
   *  - untouched buckets are never read or rewritten;
   *  - batch LWW is in-partition (sort + first-per-key), no pre-shuffle dedup.
   */
@@ -228,14 +231,6 @@ object Merge {
         * estimate is fine; only the task count depends on it. */
       batchRowsHint: Option[Long] = None): MergeStats = {
 
-    val timing = sys.env.contains("SPARK_GRAFT_TIMING")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (timing) {
-      val t1 = System.nanoTime()
-      println(f"[timing] epoch=$epochId $tag ${(t1 - t0) / 1e9}%.2f s")
-      t0 = t1
-    }
-
     val base = IceLite.load(dir)
     if (base.hasEpoch(epochId)) // exactly-once fence: replayed epoch is a no-op
       return MergeStats(epochId, applied = false, 0, 0, 0, 0, 0, 0)
@@ -289,7 +284,6 @@ object Merge {
         (perBucket.map(_._1).toSet, Some(perBucket.map(_._2).sum))
       case None => ((0 until base.buckets).toSet, None)
     }
-    lap("touched-buckets")
 
     // batch stats ride the merge job as an Observation — no extra pass
     val batchObs = org.apache.spark.sql.Observation(s"merge-batch-$epochId")
@@ -378,8 +372,6 @@ object Merge {
             math.max(1L, math.max(fromBytes, carriedTasks))).toInt
         } else minTasks
     }
-    if (timing) println(s"[timing] epoch=$epochId desiredTasks=$desiredTasks " +
-      s"(keys=${batchRowsEst.isDefined}, stats=${updates0.queryExecution.optimizedPlan.stats.sizeInBytes})")
     val subSplits = math.max(1, math.ceil(desiredTasks.toDouble / math.max(touched.size, 1)).toInt)
     // __sub must be INDEPENDENT of __bucket: both are mods of a key hash, so
     // reusing xxhash64(keyCols) would make (h mod buckets) determine
@@ -443,32 +435,20 @@ object Merge {
     val batchRows = batchMetrics.get("n").collect { case l: Long => l }.getOrElse(0L)
     val deletes = batchMetrics.get("dels").collect { case l: Long => l }.getOrElse(0L)
     val batchMaxSeq = batchMetrics.get("maxSeq").collect { case l: Long => l }.getOrElse(-1L)
-    lap("merge+write")
 
     // ---- 5. commit: COW buckets replace their files with {base + delta},
     // delta-path buckets APPEND a delta file (append-only commits rebase
     // over any concurrent disjoint commit); on an overlapping rewrite the
-    // commit fails loudly (IceLite.commit). Footer stats (rows, key bounds,
-    // __seq range) ride each DataFile for manifest-level pruning.
-    val scanned = IceLite.scanEpochFiles(epochDir, schemaVersion, keyCols)
-    // per-file key blooms for the small (delta-sized) files just written —
-    // one narrow key-column job over the epoch, skipped when every file is
-    // over KeyBloom.RowCap (bulk-replay epochs)
-    val blooms = KeyBloom.forEpoch(spark, scanned.map(_._1), keyCols)
-    // secondary bloom index upkeep: OR this epoch's values into the touched
-    // buckets' blooms (COW buckets include carried rows — a superset OR,
-    // sound). One extra narrow job over the indexed columns, skipped when
-    // no index exists.
-    val valueOr =
-      if (base.indexedCols.isEmpty) Map.empty[String, Map[Int, Array[Byte]]]
-      else KeyBloom.valueBloomsForEpoch(spark, scanned.map(_._1),
-        base.indexedCols.toSeq.sorted)
-    lap("bloom")
-    val newFiles = scanned
-      .map { case (f, origin) => f.copy(delta = origin == 0, bloom = blooms.get(f.path)) }
+    // commit fails loudly (IceLite.commit). Each file carries its footer
+    // stats (rows, key bounds, __seq range) and, measured by one aggregate
+    // over the epoch (KeyBloom.describe), its key bloom when delta-sized;
+    // the epoch's values are OR-ed into the touched buckets' value blooms
+    // (COW buckets include carried rows — a superset OR, sound).
+    val (scanned, valueOr) = KeyBloom.describe(spark, epochDir, schemaVersion, keyCols,
+      base.indexedCols.toSeq.sorted)
+    val newFiles = scanned.map { case (f, origin) => f.copy(delta = origin == 0) }
     IceLite.commit(dir, base, IceLite.CommitDelta(epochId, cowBuckets, newFiles, newSchema,
       batchMaxSeq, valueBloomOr = valueOr, requireBaseVersion = requireBaseVersion))
-    lap("commit")
 
     MergeStats(epochId, applied = true, batchRows, batchRows - deletes, deletes,
       touched.size, cowBuckets.size, rewrittenRows)

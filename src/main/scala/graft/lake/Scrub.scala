@@ -138,18 +138,11 @@ object Scrub {
       .sortWithinPartitions(base.keyCols.map(col): _*)
       .write.partitionBy("__bucket").mode("overwrite").parquet(epochDir)
 
-    val scanned = IceLite.scanEpochFiles(epochDir, base.currentSchemaVersion, base.keyCols)
-    val blooms = KeyBloom.forEpoch(spark, scanned.map(_._1), base.keyCols)
-    val newFiles = scanned.map { case (f, _) => f.copy(delta = false, bloom = blooms.get(f.path)) }
-    val valueRep =
-      if (base.indexedCols.isEmpty) Map.empty[String, Map[Int, Array[Byte]]]
-      else {
-        val computed = KeyBloom.valueBloomsForEpoch(spark, newFiles, base.indexedCols.toSeq.sorted)
-        base.indexedCols.toSeq.sorted.map { c =>
-          c -> Map(bucket -> computed.getOrElse(c, Map.empty).getOrElse(bucket,
-            new Array[Byte](KeyBloom.FixedBits >>> 3)))
-        }.toMap
-      }
+    val indexed = base.indexedCols.toSeq.sorted
+    val (scanned, valueBlooms) = KeyBloom.describe(spark, epochDir, base.currentSchemaVersion,
+      base.keyCols, indexed)
+    val newFiles = scanned.map { case (f, _) => f.copy(delta = false) }
+    val valueRep = KeyBloom.withEmptyBuckets(valueBlooms, indexed, Seq(bucket))
     IceLite.commit(dir, base, IceLite.CommitDelta(
       epochId, Set(bucket), newFiles, base.currentSchema, valueBloomReplace = valueRep))
     // the repaired files enter the integrity baseline immediately

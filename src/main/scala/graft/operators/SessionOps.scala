@@ -65,7 +65,7 @@ object SessionOps {
       // stream ≡ batch for sessionization under the same gate q40 gives
       // streaming dedup.
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q43"
+        val root = Gate.workDir("q43")
         val ev = ld(s, d, "events")
           .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("value"))
         graft.streaming.Sessionize
@@ -143,7 +143,7 @@ object SessionOps {
         import graft.streaming.LateRepair
         import graft.lake.{Dml, IceLite}
         val clock = new CdcQueries.PhaseClock("q124")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q124"
+        val root = Gate.workDir("q124")
         val tableDir = s"$root/table"
         val ev = ld(s, d, "events")
           .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
@@ -254,7 +254,7 @@ object SessionOps {
     // whole span so the equality is exact.
     OpQuery("q149_stream_delivery_dedup",
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q149"
+        val root = Gate.workDir("q149")
         val chunks = 3
         val ev = ld(s, d, "events").select(col("event_id"), col("user_id"),
           col("ts").cast("timestamp").as("ts"), col("event_type"))
@@ -293,7 +293,7 @@ object SessionOps {
     // cross-engine compare bit-exact (q01 rule).
     OpQuery("q152_stateful_totals",
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q152"
+        val root = Gate.workDir("q152")
         val out = graft.streaming.StatefulTotals.runningTotalsToCompletion(
           s, ld(s, d, "events"), root, chunks = 3)
         out.select(col("user_id"), col("event_id"), col("n"),
@@ -320,7 +320,7 @@ object SessionOps {
     // (timer loss), dropped, or double-emitted all break oracle equality.
     OpQuery("q156_event_resequencer",
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q156"
+        val root = Gate.workDir("q156")
         val ev = ld(s, d, "events")
         val out = graft.streaming.Resequence.resequenceToCompletion(
           s, ev, root, chunks = 3)
@@ -348,7 +348,7 @@ object SessionOps {
     // looseness in the online statistic all hash-diverge.
     OpQuery("q158_drift_monitor",
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q158"
+        val root = Gate.workDir("q158")
         val out = graft.streaming.DriftMonitor.monitorToCompletion(
           s, ld(s, d, "events"), root, chunks = 3,
           "cast(floor(value) as bigint)", bins = 16, width = 32)

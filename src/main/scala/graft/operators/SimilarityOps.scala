@@ -665,7 +665,7 @@ object SimilarityOps {
     * the reviewable plan artifact (graft.Explain). Reuses the index the
     * q36 query fn just built when present; builds it otherwise. */
   def q36ProbePlan(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-q36"
+    val root = Gate.workDir("q36")
     val e = ld(s, d, "embeddings")
     val idx =
       if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$root/data"))) IvfIndex(root)
@@ -826,7 +826,7 @@ object SimilarityOps {
       numQueries: Int, M: Int = 200, k: Int = 10,
       dims: Int = 64): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val dumpDir = s"${System.getProperty("java.io.tmpdir")}/graft-q161"
+    val dumpDir = Gate.workDir("q161")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dumpDir))
     val e = ld(s, d, "embeddings")
     val typed = e.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
@@ -960,12 +960,11 @@ object SimilarityOps {
     * dumped envelope + integer centroids under `<tmpdir>/<root>/`, re-derive
     * every int8 code (qz), every integer subspace distance (d2), and every
     * assignment (codes) in SQL. */
-  private def pqCodesCtes(root: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
+  private def pqCodesCtes(tag: String): String = {
     s"""dims AS (SELECT dim, mn, mx
-              FROM parquet_scan('$tmp/$root/dims/*.parquet')),
+              FROM parquet_scan('${Gate.workDir(tag)}/dims/*.parquet')),
           pqc AS (SELECT sub, cid, dim, cval
-              FROM parquet_scan('$tmp/$root/pqcents/*.parquet')),
+              FROM parquet_scan('${Gate.workDir(tag)}/pqcents/*.parquet')),
           ex AS (SELECT vec_id, i AS dim, CAST(embedding[i] AS DOUBLE) AS v
                  FROM embeddings, LATERAL generate_series(1, 64) t(i)),
           qz AS (SELECT e.vec_id, e.dim,
@@ -1007,7 +1006,7 @@ object SimilarityOps {
     import s.implicits._
     require(dims % m == 0, s"dims $dims must split into $m subspaces")
     val sub = dims / m
-    val dumpDir = s"${System.getProperty("java.io.tmpdir")}/graft-q174"
+    val dumpDir = Gate.workDir("q174")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dumpDir))
     val e = ld(s, d, "embeddings")
     val typed = e.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
@@ -1092,7 +1091,7 @@ object SimilarityOps {
     import s.implicits._
     require(dims % m == 0, s"dims $dims must split into $m subspaces")
     val sub = dims / m
-    val dumpDir = s"${System.getProperty("java.io.tmpdir")}/graft-q175"
+    val dumpDir = Gate.workDir("q175")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dumpDir))
     val e = ld(s, d, "embeddings")
     val typed = e.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
@@ -1179,7 +1178,7 @@ object SimilarityOps {
       // the union of per-batch emissions must equal the BATCH pairing —
       // the same exact oracle q20 is gated on, cosine bit for bit.
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q51"
+        val root = Gate.workDir("q51")
         graft.streaming.EmbDedupStream.mineCorpusInChunks(s,
           ld(s, d, "embeddings").select(col("label"), col("vec_id"), col("embedding")),
           root, chunks = 4).orderBy("a", "b")
@@ -1313,7 +1312,7 @@ object SimilarityOps {
         // amortized-once maintenance cost; probe is the serving-path
         // number a regression matters for.
         val clock = new CdcQueries.PhaseClock("q36")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q36"
+        val root = Gate.workDir("q36")
         val e = ld(s, d, "embeddings")
         val cents = clock("train") { trainCentroids(s, e, k = 128, iters = 5) }
         val idx = clock("build") { buildIvfIndexWith(s, e, root, cents) }
@@ -1322,7 +1321,7 @@ object SimilarityOps {
             .localCheckpoint()
         }
       },
-      Some(ivfOracleSql("graft-q36"))),
+      Some(ivfOracleSql("q36"))),
 
     OpQuery("q55_ann_ivf_append",
       // INCREMENTAL IVF ingest under the gate: train the quantizer on the
@@ -1335,7 +1334,7 @@ object SimilarityOps {
       // exactly because appendBatch assigns with those same centroids.
       (s, d) => {
         val clock = new CdcQueries.PhaseClock("q55")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q55"
+        val root = Gate.workDir("q55")
         val e = ld(s, d, "embeddings")
         val wave1 = e.filter(col("vec_id") % 3 =!= 0)
         val wave2 = e.filter(col("vec_id") % 3 === 0)
@@ -1347,7 +1346,7 @@ object SimilarityOps {
             .localCheckpoint()
         }
       },
-      Some(ivfOracleSql("graft-q55"))),
+      Some(ivfOracleSql("q55"))),
 
     OpQuery("q167_ann_ivf_delete",
       // VECTOR-INDEX DELETES under the hard gate (the q140 contract on the
@@ -1363,7 +1362,7 @@ object SimilarityOps {
       // compaction that dropped the wrong rows all hash-diverge.
       (s, d) => {
         val clock = new CdcQueries.PhaseClock("q167")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q167"
+        val root = Gate.workDir("q167")
         val e = ld(s, d, "embeddings")
         val cents = clock("train") { trainCentroids(s, e, k = 128, iters = 5) }
         val idx = clock("build") { buildIvfIndexWith(s, e, root, cents) }
@@ -1393,7 +1392,7 @@ object SimilarityOps {
           "physical drop must not change the serving results")
         masked.orderBy("qid", "rank")
       },
-      Some(ivfOracleSql("graft-q167", candFilter = "vec_id % 11 <> 0"))),
+      Some(ivfOracleSql("q167", candFilter = "vec_id % 11 <> 0"))),
 
     OpQuery("q161_ann_sq8_topk",
       // SCALAR (INT8) QUANTIZATION ANN under the hard gate — the memory
@@ -1433,7 +1432,7 @@ object SimilarityOps {
       // pattern. Recall vs the exact q21 baseline rides Bench ann_recall.
       (s, d) => pqRerankTopK(s, d, numQueries = 5),
       Some {
-        s"""WITH ${pqCodesCtes("graft-q174")},
+        s"""WITH ${pqCodesCtes("q174")},
           -- ADC: query q's LUT row for candidate x's code, summed over subs
           adc AS (SELECT d.vec_id AS qid, x.vec_id AS cand,
                    CAST(sum(d.d2) AS BIGINT) AS adc
@@ -1469,9 +1468,8 @@ object SimilarityOps {
       // stages in SQL. Recall rides Bench ann_recall (q175_ivfpq).
       (s, d) => ivfPqTopK(s, d, numQueries = 5),
       Some {
-        val tmp = System.getProperty("java.io.tmpdir")
         s"""WITH icents AS (
-            SELECT cid, cv FROM parquet_scan('$tmp/graft-q175/cents/*.parquet')),
+            SELECT cid, cv FROM parquet_scan('${Gate.workDir("q175")}/cents/*.parquet')),
           asg AS (
             SELECT vec_id, cid,
               row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn
@@ -1481,7 +1479,7 @@ object SimilarityOps {
           cells AS (SELECT vec_id AS cand, cid AS cell FROM asg WHERE rn = 1),
           probes AS (SELECT vec_id AS qid, cid AS probe
             FROM asg WHERE vec_id < 5 AND rn <= 16),
-          ${pqCodesCtes("graft-q175")},
+          ${pqCodesCtes("q175")},
           cand AS (SELECT p.qid, cl.cand FROM probes p
                    JOIN cells cl ON cl.cell = p.probe WHERE cl.cand <> p.qid),
           adc AS (SELECT c.qid, c.cand, CAST(sum(d.d2) AS BIGINT) AS adc
@@ -1518,7 +1516,7 @@ object SimilarityOps {
       // free next to the ingest it guards.
       (s, d) => {
         val clock = new CdcQueries.PhaseClock("q196")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q196"
+        val root = Gate.workDir("q196")
         val e = ld(s, d, "embeddings")
         val cents = clock("train") { trainCentroids(s, e, k = 16, iters = 5) }
         val idx = clock("build") { buildIvfIndexWith(s, e, root, cents) }
@@ -1549,7 +1547,7 @@ object SimilarityOps {
       Some({
         val duckCos = duckCosSql
         s"""WITH cents AS (
-            SELECT cid, cv FROM parquet_scan('${System.getProperty("java.io.tmpdir")}/graft-q196/cents/*.parquet')),
+            SELECT cid, cv FROM parquet_scan('${Gate.workDir("q196")}/cents/*.parquet')),
           asg AS (
             SELECT vec_id, label, cid,
               row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn
@@ -1583,7 +1581,7 @@ object SimilarityOps {
       (s, d) => {
         import s.implicits._
         val clock = new CdcQueries.PhaseClock("q207")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q207"
+        val root = Gate.workDir("q207")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val e = ld(s, d, "embeddings")
         val cents = clock("train") { trainCentroids(s, e, k = 16, iters = 5) }
@@ -1592,7 +1590,7 @@ object SimilarityOps {
           .write.mode("overwrite").parquet(s"$root/cents")
         clock("graph") { knnWithinCells(s, e, cents, j = 3).localCheckpoint() }
       },
-      Some(knnOracleSql("graft-q207") +
+      Some(knnOracleSql("q207") +
         " SELECT vec_id, rank, nbr, cos FROM knn ORDER BY vec_id, rank")),
 
     OpQuery("q208_semantic_clusters",
@@ -1607,7 +1605,7 @@ object SimilarityOps {
       (s, d) => {
         import s.implicits._
         val clock = new CdcQueries.PhaseClock("q208")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q208"
+        val root = Gate.workDir("q208")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val e = ld(s, d, "embeddings")
         val cents = clock("train") { trainCentroids(s, e, k = 16, iters = 5) }
@@ -1627,7 +1625,7 @@ object SimilarityOps {
             .orderBy("vec_id")
         }
       },
-      Some(knnOracleSql("graft-q208") +
+      Some(knnOracleSql("q208") +
         """, edges AS (SELECT vec_id AS src, nbr AS dst FROM knn
                        UNION SELECT nbr, vec_id FROM knn),
           reach(id, r) AS (
@@ -1662,9 +1660,9 @@ object SimilarityOps {
   /** The shared q207/q208 oracle prefix: cell assignment from the dumped
     * centroids + within-cell top-3 ranks, ending after the `knn` CTE
     * (callers append their SELECT or further CTEs). */
-  private def knnOracleSql(root: String): String =
+  private def knnOracleSql(tag: String): String =
     s"""WITH RECURSIVE cents AS (
-          SELECT cid, cv FROM parquet_scan('${System.getProperty("java.io.tmpdir")}/$root/cents/*.parquet')),
+          SELECT cid, cv FROM parquet_scan('${Gate.workDir(tag)}/cents/*.parquet')),
         asg AS (
           SELECT vec_id, embedding, cid,
             row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn
@@ -1682,9 +1680,8 @@ object SimilarityOps {
           WHERE rank <= 3)"""
 
   private def sq8OracleSql: String = {
-        val tmp = System.getProperty("java.io.tmpdir")
         s"""WITH dims AS (SELECT dim, mn, mx
-              FROM parquet_scan('$tmp/graft-q161/dims/*.parquet')),
+              FROM parquet_scan('${Gate.workDir("q161")}/dims/*.parquet')),
           gsc AS (SELECT max(greatest(abs(mn), abs(mx))) AS g FROM dims),
           ex AS (SELECT vec_id, i AS dim, CAST(embedding[i] AS DOUBLE) AS v
                  FROM embeddings, LATERAL generate_series(1, 64) t(i)),
@@ -1715,11 +1712,11 @@ object SimilarityOps {
 
   /** The IVF oracle (shared q36/q55): re-derive assignment, probes, and
     * top-k in SQL from the centroids parquet the query fn dumped under
-    * `<java.io.tmpdir>/<root>/cents` — training stays opaque to DuckDB
+    * `Gate.workDir(tag)/cents` — training stays opaque to DuckDB
     * (the q00 dump-then-refold pattern). */
-  private def ivfOracleSql(root: String, candFilter: String = "TRUE"): String =
+  private def ivfOracleSql(tag: String, candFilter: String = "TRUE"): String =
     s"""WITH cents AS (
-          SELECT cid, cv FROM parquet_scan('${System.getProperty("java.io.tmpdir")}/$root/cents/*.parquet')),
+          SELECT cid, cv FROM parquet_scan('${Gate.workDir(tag)}/cents/*.parquet')),
         asg AS (
           SELECT vec_id, embedding, cid,
             row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn

@@ -223,7 +223,7 @@ object SketchOps {
       // formula in SQL; the exact column keeps the estimator honest.
       (s, d) => {
         val ev = ld(s, d, "events")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q82"
+        val root = Gate.workDir("q82")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         ev.select(col("event_type"), col("user_id")).distinct()
           .withColumn("h", xxhash64(col("user_id")))
@@ -235,7 +235,7 @@ object SketchOps {
         byType.unionByName(global).orderBy("event_type")
       },
       Some(s"""WITH h AS (SELECT DISTINCT event_type, h
-               FROM parquet_scan('${System.getProperty("java.io.tmpdir")}/graft-q82/hashes/*.parquet')),
+               FROM parquet_scan('${Gate.workDir("q82")}/hashes/*.parquet')),
         ha AS (SELECT event_type, h FROM h
                UNION ALL SELECT '__all__' AS event_type, h FROM (SELECT DISTINCT h FROM h) t),
         r AS (SELECT event_type, h,
@@ -262,7 +262,7 @@ object SketchOps {
       // intersection columns ride along as the honesty surface.
       (s, d) => {
         val ev = ld(s, d, "events")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q157"
+        val root = Gate.workDir("q157")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         ev.select(col("event_type").cast("string").as("side"), col("user_id"))
           .filter(col("side").isNotNull && col("user_id").isNotNull)
@@ -274,7 +274,7 @@ object SketchOps {
           .orderBy("side_a", "side_b")
       },
       Some(s"""WITH d AS (SELECT DISTINCT side, h
-          FROM parquet_scan('${System.getProperty("java.io.tmpdir")}/graft-q157/hashes/*.parquet')),
+          FROM parquet_scan('${Gate.workDir("q157")}/hashes/*.parquet')),
         sk AS (SELECT side, h FROM (SELECT side, h,
                  row_number() OVER (PARTITION BY side ORDER BY h) AS rn FROM d)
                WHERE rn <= 64),
@@ -362,7 +362,7 @@ object SketchOps {
       // (hard-asserted).
       (s, d) => {
         import graft.streaming.KmvStream
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q206"
+        val root = Gate.workDir("q206")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val ev = ld(s, d, "events")
         val keyed0 = ev.select(col("event_type").as("grp"), col("user_id"), col("event_id"))
@@ -382,7 +382,7 @@ object SketchOps {
         out.orderBy("grp")
       },
       Some(s"""WITH h AS (SELECT DISTINCT grp, h
-               FROM parquet_scan('${System.getProperty("java.io.tmpdir")}/graft-q206/hashes/*.parquet')),
+               FROM parquet_scan('${Gate.workDir("q206")}/hashes/*.parquet')),
         r AS (SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rn FROM h),
         agg AS (SELECT grp, count(*) AS cd,
                 max(CASE WHEN rn = 64 THEN h END) AS kth_hash
@@ -408,7 +408,7 @@ object SketchOps {
       // (value DESC, id ASC) total order.
       (s, d) => {
         import graft.streaming.TopKStream
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q210"
+        val root = Gate.workDir("q210")
         val keyed = ld(s, d, "events")
           .filter(col("value").isNotNull)
           .select(col("event_type").as("grp"), col("event_id").as("id"),

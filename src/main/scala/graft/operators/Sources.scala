@@ -24,7 +24,7 @@ object Sources {
       // verbatim. Scale shape: schema enforcement at the reader means no
       // sampling pass; routing is a narrow filter on the scan.
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q139"
+        val root = Gate.workDir("q139")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val ev = ld(s, d, "events")
         // default JSON timestamp pattern truncates to millis — pin a
@@ -70,7 +70,7 @@ object Sources {
       // shortest-round-trip decimal forms, timestamps because the micros
       // pattern is pinned on both hops.
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q150"
+        val root = Gate.workDir("q150")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val ev = ld(s, d, "events")
         val ntzFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"

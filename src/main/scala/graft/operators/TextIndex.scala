@@ -392,7 +392,7 @@ object TextIndex {
       // table, so a posting lost anywhere (tokenize, append, compact,
       // prune) breaks equality.
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q125"
+        val root = Gate.workDir("q125")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val docs = ld(s, d, "documents")
         val idx = create(root, buckets = 32)
@@ -433,7 +433,7 @@ object TextIndex {
       // oracle recounts occurrences by brute-force n-gram equality over
       // the raw documents, so any lost/shifted position breaks equality.
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q126"
+        val root = Gate.workDir("q126")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val docs = ld(s, d, "documents")
         val idx = create(root, buckets = 32)
@@ -467,7 +467,7 @@ object TextIndex {
       // recomputes the identical formula from the raw corpus — must match
       // the doubles bit for bit.
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q130"
+        val root = Gate.workDir("q130")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val docs = ld(s, d, "documents")
         val idx = create(root, buckets = 32)
@@ -514,7 +514,7 @@ object TextIndex {
       // brute-force corpus oracle; segment stats must equal the corpus
       // count (proves the ranking sidecars streamed too).
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q131"
+        val root = Gate.workDir("q131")
         val docs = ld(s, d, "documents")
         val idx = graft.streaming.TextIndexStream
           .indexCorpusInChunks(s, docs, root, chunks = 4)
@@ -543,7 +543,7 @@ object TextIndex {
       // surviving doc count. Oracle: brute force over documents MINUS the
       // deleted set.
       (s, d) => {
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-q140"
+        val root = Gate.workDir("q140")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val docs = ld(s, d, "documents")
         val idx = create(root, buckets = 32)

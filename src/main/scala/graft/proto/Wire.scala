@@ -49,8 +49,6 @@ object Wire {
       throw new ProtoParseException("malformed varint (>10 bytes)")
     }
 
-    def readVarint32(): Int = readVarint64().toInt
-
     def readFixed32(): Int = {
       if (pos + 4 > limit) throw new ProtoParseException("truncated fixed32")
       val v = (buf(pos) & 0xff) |
@@ -178,10 +176,6 @@ object Wire {
       out.write(v.toInt)
     }
 
-    def writeVarint32(value: Int): Unit =
-      // negative int32 values are sign-extended to 10-byte varints per spec
-      writeVarint64(value.toLong)
-
     def writeFixed32(value: Int): Unit = {
       out.write(value & 0xff)
       out.write((value >>> 8) & 0xff)
@@ -205,13 +199,5 @@ object Wire {
       writeVarint64(bytes.length.toLong)
       writeRaw(bytes)
     }
-  }
-
-  /** Number of bytes `value` occupies as a varint. */
-  def varintSize(value: Long): Int = {
-    var v = value
-    var n = 1
-    while ((v & ~0x7fL) != 0) { v >>>= 7; n += 1 }
-    n
   }
 }

@@ -104,9 +104,6 @@ object DedupStream {
         }
         ensureStarted()
         clock("drain") { q.processAllAvailable() }
-        if (sys.env.contains("SPARK_GRAFT_TIMING"))
-          q.recentProgress.takeRight(2).foreach(p =>
-            println(s"[timing] q40 batch=${p.batchId} durationMs=${p.durationMs}"))
       }
     } finally if (q != null) q.stop()
     spark.read.parquet(s"$workRoot/pairs").select("a", "b", "jaccard")

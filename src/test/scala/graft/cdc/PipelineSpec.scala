@@ -935,6 +935,37 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$tableDir/_deadletter").count() == 2)
   }
 
+  test("an all-corrupt epoch merges nothing; its letters flush once and match the ledger") {
+    import spark.implicits._
+    val logDir = tmp("allbad-log"); val tableDir = tmp("allbad-table")
+    val fs = Cdc.fsV1
+    val desc = fs.findMessage("RepoChange").get
+    val good = (1 to 6).map { i =>
+      ChangeEvent(LogGen.encodeChange(LogGen.RawChange(s"r$i", "p", "c", "scala", "x", i.toLong,
+        "UPSERT", ""), desc, fs, includeAuthor = false), "repo_change", 1, "RepoChange", i % 2, i.toLong)
+    }
+    // epoch 1: every event dead-letters, through both failure routes
+    val bad = (0 until 7).map(i =>
+      if (i % 2 == 0) ChangeEvent(Array[Byte](0x0f, 0x01), "repo_change", 1, "RepoChange", i % 2, 100L + i)
+      else ChangeEvent(good.head.payload, "no_such_schema", 1, "RepoChange", i % 2, 100L + i))
+    good.toDF().withColumn("epoch", lit(0L))
+      .union(bad.toDF().withColumn("epoch", lit(1L)))
+      .write.partitionBy("epoch").mode("overwrite").parquet(logDir)
+    Replay.replayLog(spark, logDir, tableDir, buckets = 4)
+    val snap = IceLite.load(tableDir)
+    assert(IceLite.read(spark, snap).count() == 6, "the corrupt epoch merges no row")
+    val e1 = Lineage.read(spark, tableDir).filter(col("epochId") === "replay-1").collect()
+    assert(e1.length == 1 && e1(0).getAs[Long]("batchRows") == 0L)
+    val routes = e1(0).getAs[scala.collection.Map[String, Long]]("routes")
+    assert(routes == Map("error" -> 4L, "invalid_schema" -> 3L), routes.toString)
+    def letters = spark.read.parquet(s"$tableDir/_deadletter").select("partition", "offset")
+    assert(letters.count() == 7 && letters.distinct().count() == 7)
+    assert(letters.as[(Int, Long)].collect().map(_._2).toSet == bad.map(_.offset).toSet)
+    // a fenced re-run counts directly and still flushes each letter once
+    Replay.replayLog(spark, logDir, tableDir, buckets = 4)
+    assert(letters.count() == 7)
+  }
+
   test("streaming get-or-load: tail decodes an unseen schema version via schemaDir between batches") {
     import spark.implicits._
     import scala.collection.immutable.TreeMap

@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run each oracle SQL in
 DuckDB over the same parquet tables, sort columns by name + rows, and
-compare against the Spark result parquet."""
+compare against the Spark result parquet: values, and each column's dtype
+kind (integer / float / string / bool / datetime) as pandas renders it.
+An integer width difference (int32 vs int64) passes; an integer column
+against a float one (e.g. DuckDB's HUGEINT `sum`, which pandas renders as
+float64) fails even when the values compare equal."""
 import duckdb, json, sys, glob
 import pandas as pd
 import numpy as np
@@ -12,6 +16,12 @@ con = duckdb.connect()
 for t in ['lineitem','orders','customer','nation','region','supplier','part','events','documents','embeddings']:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{sf}/{t}.parquet')")
 sqls = json.load(open(f'{out}/oracle_sql.json'))
+
+KINDS = {"i": "integer", "u": "integer", "f": "float", "b": "bool", "M": "datetime",
+         "O": "string", "U": "string", "S": "string"}
+
+def kind(dtype):
+    return KINDS.get(dtype.kind, str(dtype))
 
 def norm(df):
     df = df[sorted(df.columns)]
@@ -37,8 +47,10 @@ for name in sorted(sqls):
                 mask = ~((a.isna() & b.isna()) | (a.astype(object) == b.astype(object)))
                 n = int(mask.sum())
                 bad.append(f"{c}({n} diffs, e.g. {a[mask].head(1).tolist()} vs {b[mask].head(1).tolist()})")
+            elif kind(a.dtype) != kind(b.dtype):
+                bad.append(f"{c}(dtype kind {kind(a.dtype)} ({a.dtype}) vs {kind(b.dtype)} ({b.dtype}))")
         if bad:
-            print(f"FAIL {name}: value diffs: {'; '.join(bad)}"); fails += 1
+            print(f"FAIL {name}: diffs: {'; '.join(bad)}"); fails += 1
         else:
             print(f"OK   {name}: {len(o)} rows")
     except Exception as e:
