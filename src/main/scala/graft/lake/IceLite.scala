@@ -1187,11 +1187,6 @@ object IceLite {
   def scanEpochFiles(epochDir: String, schemaVersion: Int, keyCols: Seq[String]): Vector[(DataFile, Int)] = {
     val root = Paths.get(epochDir)
     if (!Files.isDirectory(root)) return Vector.empty
-    val conf = new org.apache.hadoop.conf.Configuration()
-    // checksummed LocalFileSystem re-reads a .crc window per seek; footer
-    // stats are pure metadata reads, so skip the checksum layer (the same
-    // trap lookupLocal hit — ~2x on small-footer scans)
-    conf.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
     val targets = Files.walk(root).iterator().asScala
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .flatMap { p =>
@@ -1206,7 +1201,7 @@ object IceLite {
     // commit's serial slice doesn't grow with the epoch's file count
     import scala.collection.parallel.CollectionConverters._
     targets.par.map { case (p, b, origin) =>
-      (statsOf(conf, p, b, schemaVersion, keyCols), origin)
+      (statsOf(localConf, p, b, schemaVersion, keyCols), origin)
     }.toVector
   }
 
@@ -1730,14 +1725,17 @@ object IceLite {
     if (bestVals == null || bestDel) None else Some(bestVals)
   }
 
-  /** Shared Hadoop conf for the host-side lookup path (XML default-resource
-    * parsing is per-instance and costs ~100 ms; per-call confs copy this).
-    * Local files skip the checksum FS layer — parquet footers carry their
+  /** Shared Hadoop conf for the host-side reads: the lookup path and the
+    * epoch footer scan (XML default-resource parsing is per-instance and
+    * costs 3–100 ms; per-call confs copy this).
+    * It names the raw (no `.crc`) local class — parquet footers carry their
     * own magic/length validation, and the seek-heavy footer+page reads pay
-    * a CRC re-read per seek on the checksummed wrapper. */
+    * a CRC re-read per seek on the checksummed wrapper. Hadoop's FileSystem
+    * cache is keyed by scheme, not conf, so the raw class only applies if
+    * no `file:` FileSystem is cached yet (in a Spark process one always is). */
   private lazy val localConf = {
     val c = new org.apache.hadoop.conf.Configuration()
-    c.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    c.set("fs.file.impl", classOf[ForkFreeRawLocalFileSystem].getName)
     c
   }
 
