@@ -126,8 +126,8 @@ object Epoch {
     appendLocked(java.nio.file.Paths.get(dld).getParent.toString) {
       val fresh =
         if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dld)))
-          letters.join(letters.sparkSession.read.parquet(dld)
-            .select("partition", "offset").distinct(), Seq("partition", "offset"), "left_anti")
+          letters.join(letters.sparkSession.read.schema("partition INT, offset BIGINT")
+            .parquet(dld).distinct(), Seq("partition", "offset"), "left_anti")
         else letters
       fresh.write.mode("append").parquet(dld)
     }

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import graft.decode.RouteStatsAccumulator
 import graft.lake.Merge.MergeStats
 
@@ -43,6 +43,8 @@ object Lineage {
     }
   }
 
+  /** The ledger, read under [[Entry]]'s schema (the one it is written with),
+    * so no footer-inference job runs. */
   def read(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(s"$tableDir/_lineage")
+    spark.read.schema(Encoders.product[Entry].schema).parquet(s"$tableDir/_lineage")
 }

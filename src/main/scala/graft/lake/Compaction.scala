@@ -190,7 +190,7 @@ object Compaction {
     // grow it); chosen buckets with no surviving rows get an empty bloom.
     val indexed = base.indexedCols.toSeq.sorted
     val (scanned, valueBlooms) = KeyBloom.describe(spark, epochDir, base.currentSchemaVersion,
-      base.keyCols, indexed, clusterBy.map(Seq(_)).getOrElse(zorderBy))
+      structOf(base.currentSchema), base.keyCols, indexed, clusterBy.map(Seq(_)).getOrElse(zorderBy))
     val newFiles = scanned.map { case (f, _) => f.copy(delta = false) }
     val valueRep = KeyBloom.withEmptyBuckets(valueBlooms, indexed, chosen)
     // touches exactly the chosen buckets — any concurrent commit on them
@@ -262,7 +262,7 @@ object Compaction {
 
     // the value index is recomputed under the NEW bucket numbering
     val (scanned, newValueIndex) = KeyBloom.describe(spark, epochDir, base.currentSchemaVersion,
-      base.keyCols, base.indexedCols.toSeq.sorted)
+      structOf(base.currentSchema), base.keyCols, base.indexedCols.toSeq.sorted)
     IceLite.commitRebucket(dir, base, epochId, newBuckets,
       scanned.map { case (f, _) => f.copy(delta = false) }, newValueIndex)
     CompactionStats(newBuckets, rowsBefore, rowsAfter, base.files.size)

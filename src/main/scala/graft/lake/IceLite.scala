@@ -2,6 +2,12 @@ package graft.lake
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType, MetadataBuilder}
@@ -1396,6 +1402,47 @@ object IceLite {
 
   // ------------------------------------------------------------------ reads
 
+  /** Exactly the data files `paths` (a manifest's), read under `schema`
+    * (nullable, as [[structOf]] builds it) and planned from the manifest
+    * alone: no glob, no existence-check pool, no listing job, no footer
+    * inference. Each file's length and mtime come from one stat — IceLite
+    * is local-only, as its link(2) commits are — so a file missing on disk
+    * fails here, loudly. Rows are read through the session's `file:`
+    * FileSystem (`.crc` verified); `inputFiles` lists the same `file:` URIs
+    * `input_file_name()` yields. */
+  def readFiles(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame = {
+    val files = paths.map { p =>
+      val abs = Paths.get(p).toAbsolutePath
+      val a = Files.readAttributes(abs, classOf[BasicFileAttributes])
+      // block size: Hadoop's local default (fs.local.block.size); the empty
+      // authority gives the `file:///…` form Spark's own path qualifying does
+      new FileStatus(a.size, false, 1, 32L << 20, a.lastModifiedTime.toMillis,
+        new HPath("file", "", abs.toString))
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFiles(files), new StructType(),
+      schema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** [[readFiles]]' index: its files as one unpartitioned directory. */
+  private final class ManifestFiles(files: Seq[FileStatus]) extends FileIndex {
+    def rootPaths: Seq[HPath] = files.map(_.getPath)
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+    def refresh(): Unit = ()
+    val sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+    // equal over the same files, as Spark's InMemoryFileIndex is, so cached
+    // data and reused exchanges still match across separately built reads
+    private val pathSet = rootPaths.toSet
+    override def equals(o: Any): Boolean = o match {
+      case m: ManifestFiles => pathSet == m.pathSet
+      case _ => false
+    }
+    override def hashCode: Int = pathSet.hashCode
+  }
+
   /** Read a set of data files, mapping each file's stored schema version to
     * the CURRENT schema by field id: renamed columns re-aliased, missing
     * columns null-filled, widened columns cast (Iceberg read semantics).
@@ -1414,7 +1461,7 @@ object IceLite {
       groups.toSeq.sortBy(_._1).map { case (sv, fs) =>
         val old = snap.schemas(sv)
         val oldById = old.map(c => c.id -> c).toMap
-        val df = spark.read.schema(structOf(old)).parquet(fs.map(_.path): _*)
+        val df = readFiles(spark, fs.map(_.path), structOf(old))
         df.select(cur.map { c =>
           oldById.get(c.id) match {
             case Some(oc) => col(oc.name).cast(c.sparkType).as(c.name)
@@ -1727,17 +1774,8 @@ object IceLite {
 
   /** Shared Hadoop conf for the host-side reads: the lookup path and the
     * epoch footer scan (XML default-resource parsing is per-instance and
-    * costs 3–100 ms; per-call confs copy this).
-    * It names the raw (no `.crc`) local class — parquet footers carry their
-    * own magic/length validation, and the seek-heavy footer+page reads pay
-    * a CRC re-read per seek on the checksummed wrapper. Hadoop's FileSystem
-    * cache is keyed by scheme, not conf, so the raw class only applies if
-    * no `file:` FileSystem is cached yet (in a Spark process one always is). */
-  private lazy val localConf = {
-    val c = new org.apache.hadoop.conf.Configuration()
-    c.set("fs.file.impl", classOf[ForkFreeRawLocalFileSystem].getName)
-    c
-  }
+    * costs 3–100 ms; per-call confs copy this). */
+  private lazy val localConf = new org.apache.hadoop.conf.Configuration()
 
   /** Files a point lookup would open for `key` — exposed for tests/tools to
     * audit stats pruning. Bucket-prunes host-side (no Spark job) for

@@ -3,6 +3,7 @@ package graft.lake
 import org.apache.spark.sql.{Column, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Per-file key Bloom filters, carried in the snapshot manifest.
   *
@@ -179,7 +180,9 @@ object KeyBloom {
     * is not a bloom workload. */
   def valueBloom(c: Column): Column = bitsAgg(KFixed)(lit(FixedBits), xxhash64(c))
 
-  /** Measure a freshly written epoch dir: footer stats
+  /** Measure a freshly written epoch dir whose files hold `schema` (the
+    * written version's [[IceLite.structOf]]; read through
+    * [[IceLite.readFiles]], so no footer-inference job): footer stats
     * ([[IceLite.scanEpochFiles]]) plus, in AT MOST ONE Spark aggregate
     * grouped by file —
     *  - the key bloom of every file with 0 < rows ≤ [[RowCap]], sized from
@@ -195,7 +198,7 @@ object KeyBloom {
     * bound column. Returns the (file, origin) list with blooms and bounds
     * filled in, and the value blooms as col → bucket → bloom (empty when
     * nothing was read). */
-  def describe(spark: SparkSession, epochDir: String, schemaVersion: Int,
+  def describe(spark: SparkSession, epochDir: String, schemaVersion: Int, schema: StructType,
       keyCols: Seq[String], indexedCols: Seq[String] = Nil,
       boundCols: Seq[String] = Nil): (Vector[(IceLite.DataFile, Int)], Map[String, Map[Int, Array[Byte]]]) = {
     val scanned = IceLite.scanEpochFiles(epochDir, schemaVersion, keyCols)
@@ -205,9 +208,9 @@ object KeyBloom {
       if (indexedCols.isEmpty && boundCols.isEmpty) eligible else scanned.map(_._1)
     if (toRead.isEmpty) return (scanned, Map.empty)
 
-    val df = spark.read.parquet(toRead.map(_.path): _*)
+    val df = IceLite.readFiles(spark, toRead.map(_.path), schema)
     // input_file_name() yields the very URI strings inputFiles lists
-    // (file:/…, %-escaped); normalize maps each back to a manifest path
+    // (file:///…, %-escaped); normalize maps each back to a manifest path
     val byPath = toRead.map(f => f.path -> f).toMap
     val fileOf: Map[String, IceLite.DataFile] = df.inputFiles.iterator
       .flatMap(u => byPath.get(normalize(u)).map(u -> _)).toMap

@@ -444,8 +444,8 @@ object Merge {
     // over the epoch (KeyBloom.describe), its key bloom when delta-sized;
     // the epoch's values are OR-ed into the touched buckets' value blooms
     // (COW buckets include carried rows — a superset OR, sound).
-    val (scanned, valueOr) = KeyBloom.describe(spark, epochDir, schemaVersion, keyCols,
-      base.indexedCols.toSeq.sorted)
+    val (scanned, valueOr) = KeyBloom.describe(spark, epochDir, schemaVersion,
+      structOf(newSchema), keyCols, base.indexedCols.toSeq.sorted)
     val newFiles = scanned.map { case (f, origin) => f.copy(delta = origin == 0) }
     IceLite.commit(dir, base, IceLite.CommitDelta(epochId, cowBuckets, newFiles, newSchema,
       batchMaxSeq, valueBloomOr = valueOr, requireBaseVersion = requireBaseVersion))

@@ -140,7 +140,7 @@ object Scrub {
 
     val indexed = base.indexedCols.toSeq.sorted
     val (scanned, valueBlooms) = KeyBloom.describe(spark, epochDir, base.currentSchemaVersion,
-      base.keyCols, indexed)
+      structOf(base.currentSchema), base.keyCols, indexed)
     val newFiles = scanned.map { case (f, _) => f.copy(delta = false) }
     val valueRep = KeyBloom.withEmptyBuckets(valueBlooms, indexed, Seq(bucket))
     IceLite.commit(dir, base, IceLite.CommitDelta(

@@ -21,6 +21,10 @@ class DescribeSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val keyCols = Seq("repo", "path")
+  /** the schema [[writeEpoch]]'s files hold */
+  private val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    s"repo STRING, path STRING, n BIGINT, lang STRING, z INT, " +
+      s"${IceLite.SeqCol.name} BIGINT, ${IceLite.DelCol.name} BOOLEAN")
 
   /** An epoch dir in Merge/Compaction layout (`__bucket=N/part-*.parquet`),
     * two files per bucket: bucket 0's are over [[KeyBloom.RowCap]], buckets
@@ -51,8 +55,8 @@ class DescribeSpec extends AnyFunSuite {
           .filter(f => f.rows <= KeyBloom.RowCap).maxBy(_.rows)
         assert(spark.read.parquet(largest.path).rdd.getNumPartitions > 1,
           "an eligible file must span several tasks")
-        (KeyBloom.describe(spark, s"$root/epoch", 0, keyCols, indexed, Seq("z")),
-          KeyBloom.describe(spark, s"$root/epoch", 0, keyCols, indexed, Seq("n", "z")))
+        (KeyBloom.describe(spark, s"$root/epoch", 0, schema, keyCols, indexed, Seq("z")),
+          KeyBloom.describe(spark, s"$root/epoch", 0, schema, keyCols, indexed, Seq("n", "z")))
       }
     val footer = IceLite.scanEpochFiles(s"$root/epoch", 0, keyCols).map(_._1)
       .map(f => f.path -> f).toMap
@@ -103,13 +107,13 @@ class DescribeSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val (files, valueBlooms) = KeyBloom.describe(spark, s"$root/epoch", 0, keyCols)
+      val (files, valueBlooms) = KeyBloom.describe(spark, s"$root/epoch", 0, schema, keyCols)
       Thread.sleep(500) // listener events are delivered asynchronously
       assert(files.size == 2 && files.forall(_._1.bloom.isEmpty) && valueBlooms.isEmpty)
       assert(jobs.get == 0, s"${jobs.get} jobs ran")
     } finally spark.sparkContext.removeSparkListener(listener)
     // an empty dir measures nothing either
-    assert(KeyBloom.describe(spark, s"$root/absent", 0, keyCols, Seq("lang"), Seq("n")) ==
+    assert(KeyBloom.describe(spark, s"$root/absent", 0, schema, keyCols, Seq("lang"), Seq("n")) ==
       ((Vector.empty, Map.empty)))
   }
 
