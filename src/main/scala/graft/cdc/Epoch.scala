@@ -122,11 +122,15 @@ object Epoch {
     * re-flush — the fenced-replay recovery path, or an idempotent
     * whole-replay re-run — skips letters already in the store instead of
     * appending duplicates. */
+  /** The dead-letter store's event identity, typed as [[Decode.metaSchema]] types it. */
+  private val deadLetterKey = org.apache.spark.sql.types.StructType(
+    Decode.metaSchema.filter(f => f.name == "partition" || f.name == "offset"))
+
   private[cdc] def appendDeadLetters(dld: String, letters: DataFrame): Unit =
     appendLocked(java.nio.file.Paths.get(dld).getParent.toString) {
       val fresh =
         if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dld)))
-          letters.join(letters.sparkSession.read.schema("partition INT, offset BIGINT")
+          letters.join(letters.sparkSession.read.schema(deadLetterKey)
             .parquet(dld).distinct(), Seq("partition", "offset"), "left_anti")
         else letters
       fresh.write.mode("append").parquet(dld)

@@ -2,9 +2,9 @@
 """Count what one benchmark run costs the JVM, from a JFR recording.
 
     python3 tools/jfr_counts.py                     # tail_microbatch, seed 1, 25 s
-    python3 tools/jfr_counts.py --workload bulk_replay --seed 2 --seconds 20
+    python3 tools/jfr_counts.py --workload bulk_replay --seed 2
 
-Builds with perfbench/build.py, then runs one perfbench/run.py with
+Builds with perfbench/build.py, then runs one 25 s perfbench/run.py with
 JAVA_TOOL_OPTIONS starting a flight recording (settings: tools/jfr_counts.jfc)
 in the harness JVM, and prints from the recording:
   - throwables created (jdk.ExceptionStatistics, JVM-wide, caught ones too);
@@ -29,6 +29,8 @@ sys.dont_write_bytecode = True  # leave no __pycache__ beside the sources
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 SETTINGS = ROOT / "tools" / "jfr_counts.jfc"
 EVENTS = "jdk.ExceptionStatistics,jdk.ThreadStart,jdk.ProcessStart,jdk.GarbageCollection"
+SECONDS = 25  # the run length every recorded count was taken at
+TOP = 15      # rows per table
 
 
 def seconds(iso):
@@ -66,13 +68,13 @@ def counts(jfr_file):
     return throwables, threads, procs, gcs
 
 
-def table(title, rows, top):
+def table(title, rows):
     rows = list(rows)
     print(f"\n{title}")
-    for label, *vals in rows[:top]:
+    for label, *vals in rows[:TOP]:
         print("  " + "  ".join(f"{x:>10}" for x in vals) + f"  {label}")
-    if len(rows) > top:
-        print(f"  ... {len(rows) - top} more")
+    if len(rows) > TOP:
+        print(f"  ... {len(rows) - TOP} more")
 
 
 def main():
@@ -80,8 +82,6 @@ def main():
     ap.add_argument("--workload", default="tail_microbatch",
                     choices=["bulk_replay", "tail_microbatch"])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=25)
-    ap.add_argument("--top", type=int, default=15, help="rows per table")
     a = ap.parse_args()
 
     subprocess.run([sys.executable, str(ROOT / "perfbench" / "build.py")], cwd=ROOT,
@@ -94,7 +94,7 @@ def main():
                ).strip())
     run = subprocess.run([sys.executable, str(ROOT / "perfbench" / "run.py"),
                           "--workload", a.workload, "--seed", str(a.seed),
-                          "--seconds", str(a.seconds), "--trace", "0"],
+                          "--seconds", str(SECONDS), "--trace", "0"],
                          cwd=ROOT, env=env, capture_output=True, text=True)
     result = (run.stdout.strip().splitlines() or ["{}"])[-1]
     recordings = sorted(rec.glob("*.jfr"), key=lambda p: p.stat().st_size)
@@ -108,13 +108,12 @@ def main():
     throwables, threads, procs, gcs = counts(recordings[-1])  # the harness: the largest
     print(f"\nthrowables created: {throwables:,}")
     table(f"thread starts: {sum(threads.values()):,}",
-          ((k, n) for k, n in threads.most_common()), a.top)
+          ((k, n) for k, n in threads.most_common()))
     table(f"process starts: {sum(procs.values()):,}",
-          ((k, n) for k, n in procs.most_common()), a.top)
+          ((k, n) for k, n in procs.most_common()))
     table(f"GCs: {sum(g[0] for g in gcs.values()):,}, pauses "
           f"{sum(g[1] for g in gcs.values()):.3f} s  (count, pause s, cause)",
-          ((c, g[0], f"{g[1]:.3f}") for c, g in sorted(gcs.items(), key=lambda x: -x[1][1])),
-          a.top)
+          ((c, g[0], f"{g[1]:.3f}") for c, g in sorted(gcs.items(), key=lambda x: -x[1][1])))
 
 
 if __name__ == "__main__":
