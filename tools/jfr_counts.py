@@ -8,7 +8,7 @@ Builds with perfbench/build.py, then runs one 25 s perfbench/run.py with
 JAVA_TOOL_OPTIONS starting a flight recording (settings: tools/jfr_counts.jfc)
 in the harness JVM, and prints from the recording:
   - throwables created (jdk.ExceptionStatistics, JVM-wide, caught ones too);
-  - thread starts, by thread name with digit runs folded to N (pools);
+  - thread starts, by thread name with UUIDs and digit runs folded (pools);
   - process starts, by program;
   - GC count and pause time, by cause.
 The recording is kept under .bench_build/jfr/. perfbench itself is not
@@ -43,7 +43,9 @@ def seconds(iso):
 
 
 def pool(name):
-    return re.sub(r"\d+", "N", name or "?")
+    """A thread name with its UUIDs folded to U and digit runs to N."""
+    name = re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "U", name or "?")
+    return re.sub(r"\d+", "N", name)
 
 
 def counts(jfr_file):
@@ -77,35 +79,47 @@ def table(title, rows):
         print(f"  ... {len(rows) - TOP} more")
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", default="tail_microbatch",
-                    choices=["bulk_replay", "tail_microbatch"])
-    ap.add_argument("--seed", type=int, default=1)
-    a = ap.parse_args()
-
+def record(workload, seed, settings):
+    """Build, then run one untraced SECONDS-long perfbench run with a flight
+    recording (`settings`, a .jfc file) started in the harness JVM through
+    JAVA_TOOL_OPTIONS. Prints the run's outcome and returns the harness's
+    recording (the largest one written)."""
     subprocess.run([sys.executable, str(ROOT / "perfbench" / "build.py")], cwd=ROOT,
                    check=True, stdout=subprocess.DEVNULL)
-    rec = ROOT / ".bench_build" / "jfr" / f"{a.workload}-seed{a.seed}-{time.strftime('%Y%m%dT%H%M%S')}"
+    rec = ROOT / ".bench_build" / "jfr" / f"{workload}-seed{seed}-{time.strftime('%Y%m%dT%H%M%S')}"
     rec.mkdir(parents=True)
     # a directory as the file name: each JVM writes its own recording there
     env = dict(os.environ, JAVA_TOOL_OPTIONS=(os.environ.get("JAVA_TOOL_OPTIONS", "") +
-               f" -XX:StartFlightRecording=filename={rec},settings={SETTINGS},dumponexit=true"
-               ).strip())
+               f" -XX:StartFlightRecording=filename={rec},settings={settings},"
+               "dumponexit=true").strip())
     run = subprocess.run([sys.executable, str(ROOT / "perfbench" / "run.py"),
-                          "--workload", a.workload, "--seed", str(a.seed),
+                          "--workload", workload, "--seed", str(seed),
                           "--seconds", str(SECONDS), "--trace", "0"],
                          cwd=ROOT, env=env, capture_output=True, text=True)
     result = (run.stdout.strip().splitlines() or ["{}"])[-1]
     recordings = sorted(rec.glob("*.jfr"), key=lambda p: p.stat().st_size)
     if run.returncode != 0 or not recordings:
         sys.stderr.write(run.stdout[-4000:] + run.stderr[-4000:])
-        sys.exit(f"jfr_counts: run exited {run.returncode} with {len(recordings)} recordings")
+        sys.exit(f"{pathlib.Path(sys.argv[0]).name}: run exited {run.returncode} "
+                 f"with {len(recordings)} recordings")
     r = json.loads(result)
-    print(f"run: {a.workload} seed {a.seed}, correct={r.get('correct')} "
+    print(f"run: {workload} seed {seed}, correct={r.get('correct')} "
           f"failed={r.get('failed')}; recording {recordings[-1].relative_to(ROOT)}")
+    return recordings[-1]
 
-    throwables, threads, procs, gcs = counts(recordings[-1])  # the harness: the largest
+
+def arguments(description):
+    ap = argparse.ArgumentParser(description=description)
+    ap.add_argument("--workload", default="tail_microbatch",
+                    choices=["bulk_replay", "tail_microbatch"])
+    ap.add_argument("--seed", type=int, default=1)
+    return ap
+
+
+def main():
+    a = arguments(__doc__.split("\n")[0]).parse_args()
+    recording = record(a.workload, a.seed, SETTINGS)
+    throwables, threads, procs, gcs = counts(recording)
     print(f"\nthrowables created: {throwables:,}")
     table(f"thread starts: {sum(threads.values()):,}",
           ((k, n) for k, n in threads.most_common()))
